@@ -269,17 +269,24 @@ object Bench {
     // names; trailing * for prefix); the driver never sets it, so its
     // boards are always the full surface
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    def timeOne(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // a failed query is named on stderr with its exception class and
+    // left off the board (None): a fast failure must never read as a
+    // fast row
+    def timeOne(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
       val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[bench] $name: ${e.getMessage}") }
+      val ok =
+        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] FAILED $name: ${e.getClass.getName}: ${e.getMessage}")
+          false
+        }
       // close the timing window BEFORE cache hygiene: unpersisting the
       // query's registered caches is harness bookkeeping, not query work
       val dt = (System.nanoTime() - t0) / 1e9
       // blocks cached by one query must not perturb the next query's
       // memory or timing
       Caches.drain()
-      dt
+      if (ok) Some(dt) else None
     }
     val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
     val results = only.map(_.map(_.trim).filter(_.nonEmpty)).filter(_.nonEmpty) match {
@@ -291,16 +298,16 @@ object Bench {
         val seen = scala.collection.mutable.Map[String, Int]()
         tokens.flatMap(t => sorted.filter { case (n, _) =>
           NameFilter.selected(Some(Seq(t)), n) })
-          .map { case (name, fn) =>
+          .flatMap { case (name, fn) =>
             val k = seen.updateWith(name)(c => Some(c.getOrElse(0) + 1)).get
             // suffix INSIDE the short prefix ("q16#2_like_pred") so the
             // compact line's takeWhile('_') shortener keeps it unique
             val label = if (k == 1) name
               else name.takeWhile(_ != '_') + s"#$k" + name.dropWhile(_ != '_')
-            label -> timeOne(name, fn)
+            timeOne(name, fn).map(label -> _)
           }
       case None =>
-        val board = sorted.map { case (name, fn) => name -> timeOne(name, fn) }
+        val board = sorted.flatMap { case (name, fn) => timeOne(name, fn).map(name -> _) }
         // trailing sentinels (default on; SPARK_GRAFT_SENTINELS=0
         // disables): re-time this run's five most expensive rows at the
         // END of the board, keyed "qNN#2". A genuinely slow operator
@@ -326,9 +333,9 @@ object Bench {
           // which is exactly the evidence that run needs.
           val drift = drifted(board, previousBench(), hot.toSet, cap = board.size)
           val byName = sorted.toMap
-          val repeats = (hot ++ drift).map { name =>
+          val repeats = (hot ++ drift).flatMap { name =>
             val label = name.takeWhile(_ != '_') + "#2" + name.dropWhile(_ != '_')
-            (name, label, timeOne(name, byName(name)))
+            timeOne(name, byName(name)).map((name, label, _))
           }
           // MEDIAN-OF-3 escalation (r15, verdict item 7): when a row's
           // sentinel diverges >1.5x from its primary IN EITHER DIRECTION,
@@ -339,14 +346,15 @@ object Bench {
           // the largest noise source left). Bounded: only divergent rows
           // pay the third run.
           val primaryOf = board.toMap
-          val third = repeats.collect {
+          val third = repeats.flatMap {
             case (name, _, t2) if {
               val t1 = primaryOf(name)
               val hi = math.max(t1, t2); val lo = math.min(t1, t2)
               lo > 0 && hi / lo > 1.5 && hi - lo > 0.8
             } =>
               val label = name.takeWhile(_ != '_') + "#3" + name.dropWhile(_ != '_')
-              label -> timeOne(name, byName(name))
+              timeOne(name, byName(name)).map(label -> _)
+            case _ => None
           }
           board ++ repeats.map { case (_, l, t) => l -> t } ++ third
         }

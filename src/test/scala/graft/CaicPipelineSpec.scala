@@ -215,4 +215,127 @@ class CaicPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(f0.get("geometry").get("type").asText() === "Polygon")
     assert(f0.get("geometry").get("coordinates").isArray)
   }
+
+  // ------------------------------------------------ plan shape and edge pins
+
+  private def area(id: String, geometry: String): String =
+    s"""{"type":"Feature","id":$id,"properties":{},"geometry":$geometry}"""
+  private def fc(features: String*): String =
+    features.mkString("""{"type":"FeatureCollection","features":[""", ",", "]}")
+  private val square =
+    """{"type":"Polygon","coordinates":[[[0.0,0.0],[1.0,0.0],[1.0,1.0],[0.0,0.0]]]}"""
+
+  private def plan(df: org.apache.spark.sql.DataFrame) = {
+    df.collect()
+    PlanNodes.all(df.queryExecution.executedPlan)
+  }
+
+  test("one invocation plans no Exchange, no broadcast and no Window") {
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange}
+    import org.apache.spark.sql.execution.window.WindowExec
+    val areasOnly = {
+      import spark.implicits._
+      CaicPipeline.areaFeatures(spark, Seq(areasJson).toDF("value"))
+    }
+    for (df <- Seq(CaicPipeline.run(spark, areasJson, productsJson), areasOnly)) {
+      val nodes = plan(df)
+      assert(!nodes.exists(_.isInstanceOf[Exchange]), nodes.mkString("\n"))
+      assert(!nodes.exists(_.isInstanceOf[BroadcastExchangeExec]), nodes.mkString("\n"))
+      assert(!nodes.exists(_.isInstanceOf[WindowExec]), nodes.mkString("\n"))
+    }
+  }
+
+  test("one CaicJob.runOnce launches exactly one Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import graft.caic.{CaicJob, GraftConfig}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val fetcher = new CaicJob.Fetcher {
+      def fetch(url: String): String =
+        if (url.contains("%2Fproducts%2Fall%2Farea")) areasJson else productsJson
+    }
+    var submitted = ""
+    val submitter = new CaicJob.Submitter { def submit(body: String): Unit = submitted = body }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusSync.waitUntilEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      CaicJob.runOnce(spark, fetcher, submitter, GraftConfig(debug = false, "-", "-"))
+      org.apache.spark.ListenerBusSync.waitUntilEmpty(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get === 1)
+    assert(mapper.readTree(submitted).get("features").size() === 4)
+  }
+
+  test("an areaId matching no area, and an empty features array, drop the row under ANSI") {
+    spark.conf.set("spark.sql.ansi.enabled", "true") // Spark 4's default, made explicit
+    val orphan = "[" + forecast("999", btl = "low", tln = "low", alp = "low") + "]"
+    assert(CaicPipeline.run(spark, areasJson, orphan).collect().isEmpty)
+    assert(CaicPipeline.run(spark, fc(), productsJson).collect().isEmpty)
+    // the other forecasts of the same document still join
+    val mixed = "[" + Seq(forecast("999", "low", "low", "low"),
+      forecast("303", "low", "low", "low")).mkString(",") + "]"
+    assert(CaicPipeline.run(spark, areasJson, mixed).collect()
+      .map(_.getAs[String]("id")).toSeq === Seq("caic-303"))
+  }
+
+  test("two forecasts for the same areaId both emit features") {
+    val pj = "[" + Seq(forecast("101", "low", "low", "low", remarks = "first"),
+      forecast("101", "high", "high", "high", remarks = "second")).mkString(",") + "]"
+    val rows = CaicPipeline.run(spark, areasJson, pj).collect()
+    assert(rows.map(_.getAs[String]("id")).toSeq === Seq("caic-101", "caic-101"))
+    assert(rows.map(_.getAs[org.apache.spark.sql.Row]("properties")
+      .getAs[String]("remarks")).toSet === Set("first", "second"))
+  }
+
+  test("a feature with a null id never matches") {
+    val areas = fc(area("null", square), area("\"7\"", square))
+    val nullAreaId =
+      """{"type":"avalancheforecast","id":"f-n","areaId":null,"forecaster":"x",
+        |"avalancheSummary":{"days":[{"date":"d","content":"c"}]},
+        |"dangerRatings":{"days":[{"alp":"low","tln":"low","btl":"low"}]}}""".stripMargin
+    val pj = "[" + Seq(nullAreaId, forecast("null", "low", "low", "low"),
+      forecast("7", "low", "low", "low")).mkString(",") + "]"
+    assert(CaicPipeline.run(spark, areas, pj).collect()
+      .map(_.getAs[String]("id")).toSeq === Seq("caic-7"))
+  }
+
+  test("areaFeatures keeps the last feature per id, null ids included") {
+    import spark.implicits._
+    val areas = fc(area("null", """{"type":"Point","coordinates":[1,1]}"""),
+      area("\"a\"", """{"type":"Point","coordinates":[2,2]}"""),
+      area("null", """{"type":"Point","coordinates":[3,3]}"""),
+      area("\"a\"", """{"type":"Point","coordinates":[4,4]}"""),
+      area("5", """{"type":"Point","coordinates":[5,5]}"""))
+    val got = CaicPipeline.areaFeatures(spark, Seq(areas).toDF("value")).collect()
+      .map(r => Option(r.getAs[String]("id")) ->
+        mapper.readTree(r.getAs[String]("geometry")).get("coordinates").get(0).asInt())
+    assert(got.toMap === Map(None -> 3, Some("a") -> 4, Some("5") -> 5))
+    assert(got.length === 3)
+  }
+
+  test("a null, non-object or untyped geometry is dropped") {
+    val areas = fc(area("\"g0\"", "null"), area("\"g1\"", "\"flat\""),
+      area("\"g2\"", "[1,2]"), area("\"g3\"", """{"coordinates":[1,2]}"""),
+      area("\"g4\"", """{"type":"Point","coordinates":[1,2]}"""))
+    val pj = "[" + (0 to 4).map(i => forecast(s"g$i", "low", "low", "low")).mkString(",") + "]"
+    assert(CaicPipeline.run(spark, areas, pj).collect()
+      .map(_.getAs[String]("id")).toSeq === Seq("caic-g4"))
+  }
+
+  test("a products document with no forecasts gives an empty FeatureCollection") {
+    val pj = """[{"type":"regionaldiscussion","id":"d1","publicName":"Snowpack"}]"""
+    for (doc <- Seq(pj, "[]"))
+      assert(CaicPipeline.toFeatureCollection(CaicPipeline.run(spark, areasJson, doc)) ===
+        """{"type":"FeatureCollection","features":[]}""")
+  }
+}
+
+/** Every node of an executed plan, looking inside adaptive plans. */
+private object PlanNodes
+    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+  def all(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = collect(p) { case n => n }
 }
