@@ -1,6 +1,6 @@
 package graft.caic
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
@@ -92,19 +92,19 @@ object CaicJob {
   }
 
   /** One batch run (≡ one scheduled Lambda invocation, task.ts:57),
-    * resolving config from the session/environment. */
-  def runOnce(spark: SparkSession, fetcher: Fetcher, submitter: Submitter): DataFrame =
+    * resolving config from the session/environment. Returns the submitted
+    * document. */
+  def runOnce(spark: SparkSession, fetcher: Fetcher, submitter: Submitter): String =
     runOnce(spark, fetcher, submitter, GraftConfig.resolve(spark))
 
   /** One batch run with an explicit config. `config.debug` mirrors the
     * reference's DEBUG input: print the submitted document to the log. */
   def runOnce(spark: SparkSession, fetcher: Fetcher, submitter: Submitter,
-      config: GraftConfig): DataFrame = {
+      config: GraftConfig): String = {
     val (areasUrl, productsUrl) = urls()
-    val out = CaicPipeline.run(spark, fetcher.fetch(areasUrl), fetcher.fetch(productsUrl))
-    val doc = CaicPipeline.toFeatureCollection(out)
+    val doc = CaicPipeline.document(spark, fetcher.fetch(areasUrl), fetcher.fetch(productsUrl))
     if (config.debug) println(s"[graft-caic] submitting to layer ${config.layer} at ${config.api}: $doc")
     submitter.submit(doc)
-    out
+    doc
   }
 }

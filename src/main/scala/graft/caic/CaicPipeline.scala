@@ -1,13 +1,17 @@
 package graft.caic
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.util.{Collections, WeakHashMap}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameFactory, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import CaicModel._
 
 /** The reference dataflow (task.ts:85-190) re-expressed as one declarative
-  * DataFrame composition. Every semantic trap from SURVEY.md §7.4 is
-  * preserved and unit-tested in CaicPipelineSpec:
+  * composition of Column expressions. Every semantic trap from SURVEY.md
+  * §7.4 is preserved and unit-tested in CaicPipelineSpec:
   *
   *  - last-wins dedup of duplicate area ids (Map.set, task.ts:97-100)
   *  - inner-join row drop on missing area (task.ts:140-141)
@@ -19,15 +23,29 @@ import CaicModel._
   *    first `Multi` stripped from the type, properties shared across
   *    parts (task.ts:171-183)
   *
-  * Scale shape: one invocation is one document pair, so `run` parses both
-  * documents in a single row and keeps the (tens of) areas as an array
-  * beside every product row. The join is an in-row lookup of the last area
-  * with a matching id — O(areas) per forecast, the `Map.get` of the
-  * reference — and the Multi explode is a single `posexplode`. The plan is
-  * one partition with no Exchange, no broadcast and no Window, so an
-  * invocation costs exactly one Spark job (pinned in CaicPipelineSpec).
+  * Scale shape: one invocation is one document pair of tens of areas. Both
+  * documents are parsed in one row, and the whole dataflow after the parse
+  * is one `features` column over the parsed arrays: the join is an in-row
+  * lookup of the last area with a matching id (the reference's `Map.get`),
+  * the filters are `filter`, the styling is `transform`, and the Multi
+  * explode is `flatten` over each feature's parts. `run` is `inline` of
+  * that column; `document` folds it further into the submitted JSON text
+  * (`array_join` of one string per feature). With no generator left, the
+  * optimizer's `ConvertToLocalRelation` evaluates `document`'s projection
+  * on the driver, so an invocation launches zero Spark jobs and its
+  * executed plan is a bare `LocalTableScanExec`. The plan is analyzed once
+  * per session and conf (`prepared`); each invocation only swaps the input
+  * row. CaicPipelineSpec pins the job count, the plan and the re-plan on a
+  * conf change.
   */
 object CaicPipeline {
+
+  // Literal columns are built once: `typedLit` derives the type through
+  // Scala runtime reflection on every call.
+  private val severityLit = typedLit(severity)
+  private val humanSeverityLit = typedLit(humanSeverity)
+  private val fillsLit = typedLit(fills)
+  private val noParts = array().cast(ArrayType(StringType))
 
   // ---------------------------------------------------------------- sources
 
@@ -35,7 +53,7 @@ object CaicPipeline {
     * null-safe equal to `key`, or null when none is. This is the
     * reference's `Map.set` (task.ts:97-100: a duplicate id keeps its final
     * occurrence) read in-row, with no shuffle or window; `areaFeatures`
-    * and `run` both apply it. */
+    * and the forecast-to-area join both apply it. */
   def lastIndexOfId(features: Column, key: Column): Column =
     array_max(transform(features, (f, i) => when(f("id") <=> key, i)))
 
@@ -51,19 +69,19 @@ object CaicPipeline {
       .select(col("f.id").as("id"), col("f.properties").as("properties"),
         col("f.geometry").as("geometry"))
 
-  /** Parse one invocation's documents into one row per product (task.ts:95,
-    * 107), each carrying the document's full `areas` feature array.
+  /** One invocation's documents (task.ts:95,107) parsed in one row:
+    * `areas`, the area feature array, and `products`, the product array.
     * PERMISSIVE mode reproduces the reference's union schema
     * (task.ts:45-52): records that aren't forecasts keep `type` and
-    * null-pad the rest, surviving until the type filter. The two
-    * documents are parsed once, before the explode. */
-  def products(spark: SparkSession, areasJson: String, productsJson: String): DataFrame = {
+    * null-pad the rest, surviving until the type filter. The parse is its
+    * own select: the lookup lambda reads `areas` once per product, and a
+    * `from_json` inlined there would re-parse the document each time. */
+  private def parsed(spark: SparkSession, areasJson: String, productsJson: String): DataFrame = {
     import spark.implicits._
     Seq((areasJson, productsJson)).toDF("areas", "products")
       .select(
         from_json(col("areas"), featureCollectionType, jsonOpts)("features").as("areas"),
         from_json(col("products"), ArrayType(productType), jsonOpts).as("products"))
-      .select(col("areas"), inline(col("products")))
   }
 
   private val jsonOpts = Map("mode" -> "PERMISSIVE")
@@ -76,7 +94,7 @@ object CaicPipeline {
     * exactly on JS semantics including the §7.4-1 trap (unknown → -1,
     * which then WINS the min because -1 < every real index). */
   def jsIndexOf(c: Column): Column =
-    (array_position(typedLit(severity), c) - 1).cast("int")
+    (array_position(severityLit, c) - 1).cast("int")
 
   /** Worst-case rating index across the three elevation bands of day 0,
     * seeded with noRating (task.ts:143-146). Sequential `if <` chains are
@@ -95,112 +113,156 @@ object CaicPipeline {
     * (dropped JSON keys). Spark representation: null (§7.4-1 decision:
     * byte-faithful). */
   def severityKey(sevIdx: Column): Column =
-    when(sevIdx >= 0, element_at(typedLit(severity), sevIdx + 1))
+    when(sevIdx >= 0, element_at(severityLit, sevIdx + 1))
 
   // ---------------------------------------------------------------- pipeline
 
-  /** forecasts(filtered) ⋈ areas → styled output features, pre-explode.
-    * One output row per joined forecast (task.ts:136-169). `forecasts`
-    * rows carry their document's `areas` array (see `products`). */
-  def joined(forecasts: DataFrame): DataFrame = {
-    val day0 = element_at(col("dangerRatings.days"), 1)
-    val sevKey = severityKey(severityIndex(day0("btl"), day0("tln"), day0("alp")))
-    forecasts
-      // in-row lookup join: the last area with this id (task.ts:140);
-      // try_element_at, because a miss must read null, not raise under ANSI
-      .withColumn("area", try_element_at(col("areas"),
-        lastIndexOfId(col("areas"), col("areaId")) + 1))
+  /** forecasts ⋈ areas → styled output features, pre-explode: one element
+    * per kept forecast (task.ts:136-169), over the parsed arrays. */
+  private def styled(areas: Column, products: Column): Column = {
+    val forecasts = filter(products, p =>
       // type filter + union narrowing (task.ts:114)
-      .filter(col("type") === "avalancheforecast" &&
+      p("type") === "avalancheforecast" &&
         // null-safe empty/missing days drop (task.ts:137-138, §7.4-8)
-        coalesce(size(col("avalancheSummary.days")), lit(0)) > 0 &&
-        coalesce(size(col("dangerRatings.days")), lit(0)) > 0 &&
-        // missing key ⇒ drop (task.ts:141); a null areaId never matches,
-        // as in an inner equi-join
-        col("area").isNotNull && col("areaId").isNotNull)
-      .select(
-        concat(lit("caic-"), col("areaId")).as("id"), // task.ts:149
+        coalesce(size(p("avalancheSummary")("days")), lit(0)) > 0 &&
+        coalesce(size(p("dangerRatings")("days")), lit(0)) > 0 &&
+        // a null areaId never matches, as in an inner equi-join
+        p("areaId").isNotNull)
+    transform(forecasts, p => {
+      val day0 = element_at(p("dangerRatings")("days"), 1)
+      val sevKey = severityKey(severityIndex(day0("btl"), day0("tln"), day0("alp")))
+      val summaryDays = p("avalancheSummary")("days")
+      struct(
+        concat(lit("caic-"), p("areaId")).as("id"), // task.ts:149
         lit("Feature").as("type"),
         struct(
-          element_at(typedLit(humanSeverity), sevKey).as("callsign"), // task.ts:152
-          element_at(typedLit(fills), sevKey).as("fill"),             // task.ts:153
-          lit(0.5).as("fill-opacity"),                                // task.ts:154
-          element_at(typedLit(fills), sevKey).as("stroke"),           // task.ts:155
-          lit(0.75).as("stroke-opacity"),                             // task.ts:156
+          element_at(humanSeverityLit, sevKey).as("callsign"), // task.ts:152
+          element_at(fillsLit, sevKey).as("fill"),             // task.ts:153
+          lit(0.5).as("fill-opacity"),                         // task.ts:154
+          element_at(fillsLit, sevKey).as("stroke"),           // task.ts:155
+          lit(0.75).as("stroke-opacity"),                      // task.ts:156
           // conditional remarks with default (task.ts:157); the empty case
           // is unreachable post-filter but kept for fidelity
-          when(size(col("avalancheSummary.days")) > 0,
-            element_at(col("avalancheSummary.days"), 1)("content"))
+          when(size(summaryDays) > 0, element_at(summaryDays, 1)("content"))
             .otherwise("No Remarks").as("remarks"),
-          struct(                                                     // task.ts:158-166
-            col("forecaster"),
-            col("issueDateTime"),
-            col("expiryDateTime"),
-            col("isTranslated"),
+          struct(                                              // task.ts:158-166
+            p("forecaster").as("forecaster"),
+            p("issueDateTime").as("issueDateTime"),
+            p("expiryDateTime").as("expiryDateTime"),
+            p("isTranslated").as("isTranslated"),
             day0("alp").as("ratingAbove"),
             day0("tln").as("ratingNear"),
             day0("btl").as("ratingBelow")
           ).as("metadata")
         ).as("properties"),
-        col("area.geometry").as("geometry"))
+        // in-row lookup join: the last area with this id (task.ts:140-141);
+        // try_element_at, because a miss must read null, not raise under
+        // ANSI. A miss has no geometry, so `explodeFeature` drops it.
+        try_element_at(areas, lastIndexOfId(areas, p("areaId")) + 1)("geometry")
+          .as("geometry"))
+    })
   }
 
-  /** Multi-geometry explode (task.ts:171-186, §2A-15/16) as ONE
-    * `posexplode`: a Multi geometry explodes over its parts, any other
-    * typed geometry over the one-element array of itself. A null,
-    * non-object or untyped geometry has no parts and drops out, like the
-    * reference's type test. Geometry is an opaque JSON string; parts are
-    * pulled out by parsing `$.coordinates` as `array<string>` — each
-    * element keeps its raw JSON text, sidestepping the ragged-nesting
-    * problem (§7.4-2). A part gets the `-idx` id suffix (task.ts:174) and
-    * the first `Multi` stripped from its type (JS `replace('Multi','')` →
-    * regexp `^Multi`, task.ts:179); properties are shared by every part
-    * (§7.4-3). Output order follows the input, parts in order, as the
-    * reference appends them (task.ts:173,185). */
-  def explodeMulti(features: DataFrame): DataFrame = {
-    val geomType = get_json_object(col("geometry"), "$.type")
+  /** Multi-geometry explode of one feature (task.ts:171-186, §2A-15/16):
+    * a Multi geometry explodes over its parts, any other typed geometry
+    * over the one-element array of itself. A null, non-object or untyped
+    * geometry has no parts and drops out, like the reference's type test.
+    * Geometry is an opaque JSON string; parts are pulled out by parsing
+    * `$.coordinates` as `array<string>` — each element keeps its raw JSON
+    * text, sidestepping the ragged-nesting problem (§7.4-2). A part gets
+    * the `-idx` id suffix (task.ts:174) and the first `Multi` stripped from
+    * its type (JS `replace('Multi','')` → regexp `^Multi`, task.ts:179);
+    * properties are shared by every part (§7.4-3). Parts keep their order,
+    * as the reference appends them (task.ts:173,185). */
+  private def explodeFeature(f: Column): Column = {
+    val geomType = get_json_object(f("geometry"), "$.type")
+    val isMulti = geomType.startsWith("Multi") // task.ts:171
     val parts =
-      when(geomType.startsWith("Multi"), // task.ts:171
-        from_json(get_json_object(col("geometry"), "$.coordinates"), ArrayType(StringType)))
-        .when(geomType.isNotNull, array(col("geometry")))
-    val isMulti = col("geom_type").startsWith("Multi")
-    features
-      .select(col("id"), col("type"), col("properties"), geomType.as("geom_type"),
-        posexplode(parts).as(Seq("idx", "part")))
-      .select(
-        when(isMulti, concat(col("id"), lit("-"), col("idx"))).otherwise(col("id")).as("id"),
-        col("type"),
-        col("properties"),
-        when(isMulti, concat(lit("{\"type\":\""),
-          regexp_replace(col("geom_type"), "^Multi", ""),
-          lit("\",\"coordinates\":"), col("part"), lit("}")))
-          .otherwise(col("part")).as("geometry"))
+      when(isMulti,
+        from_json(get_json_object(f("geometry"), "$.coordinates"), ArrayType(StringType)))
+        .when(geomType.isNotNull, array(f("geometry")))
+    // `flatten` returns null when any element is null, so a dropped
+    // geometry must contribute an empty parts array, not null.
+    transform(coalesce(parts, noParts), (part, idx) => struct(
+      when(isMulti, concat(f("id"), lit("-"), idx)).otherwise(f("id")).as("id"),
+      f("type").as("type"),
+      f("properties").as("properties"),
+      when(isMulti, concat(lit("{\"type\":\""),
+        regexp_replace(geomType, "^Multi", ""),
+        lit("\",\"coordinates\":"), part, lit("}")))
+        .otherwise(part).as("geometry")))
   }
 
-  /** Full pipeline: raw JSON documents → output features. */
-  def run(spark: SparkSession, areasJson: String, productsJson: String): DataFrame =
-    explodeMulti(joined(products(spark, areasJson, productsJson)))
+  /** Every output feature of one invocation, as an array of
+    * `(id, type, properties, geometry)` structs over the parsed documents.
+    * `styled` is materialized by its own `transform`, so each feature's
+    * area lookup runs once however often `explodeFeature` reads it. */
+  private def features(areas: Column, products: Column): Column =
+    flatten(transform(styled(areas, products), f => explodeFeature(f)))
 
-  /** Assemble the output FeatureCollection (task.ts:109-112,189) as a
-    * single JSON document. Driver-side collect is faithful to the
-    * reference sink; the scaled path writes features line-delimited via
-    * `df.write.json` instead. */
-  def toFeatureCollection(features: DataFrame): String = {
-    // Serialize everything EXCEPT geometry, then append the raw geometry
-    // JSON before the closing brace — no needle search, so free-text
-    // fields containing the literal `"geometry":` can't misdirect the
-    // splice, and a null geometry degrades to an explicit `null` member
-    // (JSON.stringify semantics) instead of corrupting the document.
-    val rows = features
-      .select(to_json(struct(
-        col("id"), col("type"),
-        col("properties"))).as("j"), col("geometry"))
-      .collect()
-      .map { r =>
-        val j = r.getString(0)
-        val g = if (r.isNullAt(1)) "null" else r.getString(1)
-        j.dropRight(1) + ",\"geometry\":" + g + "}"
-      }
-    s"""{"type":"FeatureCollection","features":[${rows.mkString(",")}]}"""
+  private val featureRow = struct(col("id"), col("type"), col("properties"), col("geometry"))
+
+  /** Multi-geometry explode of a frame of `(id, type, properties,
+    * geometry)` rows; see `explodeFeature`. */
+  def explodeMulti(features: DataFrame): DataFrame =
+    features.select(inline(explodeFeature(featureRow)))
+
+  /** Full pipeline: raw JSON documents → output features, one row each. */
+  def run(spark: SparkSession, areasJson: String, productsJson: String): DataFrame =
+    parsed(spark, areasJson, productsJson)
+      .select(inline(features(col("areas"), col("products"))))
+
+  // --------------------------------------------------------------- document
+
+  /** One feature's JSON text. Everything EXCEPT geometry is serialized,
+    * then the raw geometry JSON is appended before the closing brace — no
+    * needle search, so free-text fields containing the literal
+    * `"geometry":` can't misdirect the splice, and a null geometry
+    * degrades to an explicit `null` member (JSON.stringify semantics)
+    * instead of corrupting the document. */
+  private def featureJson(f: Column): Column = {
+    val head = to_json(struct(f("id").as("id"), f("type").as("type"),
+      f("properties").as("properties")))
+    concat(head.substr(lit(1), length(head) - 1), lit(",\"geometry\":"),
+      coalesce(f("geometry"), lit("null")), lit("}"))
+  }
+
+  private val documentHead = """{"type":"FeatureCollection","features":["""
+  private val documentTail = "]}"
+
+  /** Assemble the output FeatureCollection (task.ts:109-112,189) of a
+    * frame of features as a single JSON document, collected to the driver
+    * like the reference sink. */
+  def toFeatureCollection(features: DataFrame): String =
+    features.select(featureJson(featureRow)).collect()
+      .map(_.getString(0)).mkString(documentHead, ",", documentTail)
+
+  /** Analyzed plan of one invocation's document, prepared per session and
+    * conf snapshot: a conf change (ANSI, time zone, ...) changes how the
+    * expressions resolve, so it prepares a new plan. */
+  private final case class Prepared(conf: Map[String, String], plan: LogicalPlan)
+  private val prepared = Collections.synchronizedMap(new WeakHashMap[SparkSession, Prepared]())
+
+  private def prepare(spark: SparkSession): LogicalPlan = {
+    val conf = spark.conf.getAll
+    Option(prepared.get(spark)).filter(_.conf == conf).getOrElse {
+      val fs = features(col("areas"), col("products"))
+      // a products document that does not parse has null features; like
+      // `run`'s zero rows, that is an empty feature list
+      val doc = concat(lit(documentHead),
+        coalesce(array_join(transform(fs, f => featureJson(f)), ","), lit("")), lit(documentTail))
+      val p = Prepared(conf, parsed(spark, "", "").select(doc).queryExecution.analyzed)
+      prepared.put(spark, p)
+      p
+    }.plan
+  }
+
+  /** One invocation's submitted document (task.ts:189): the prepared plan
+    * with this document pair as its input row. The optimizer folds the
+    * whole projection on the driver, so `collect` launches no job. */
+  def document(spark: SparkSession, areasJson: String, productsJson: String): String = {
+    val row = InternalRow(UTF8String.fromString(areasJson), UTF8String.fromString(productsJson))
+    val plan = prepare(spark).transform { case r: LocalRelation => r.copy(data = Seq(row)) }
+    DataFrameFactory.ofAnalyzed(spark, plan).collect().head.getString(0)
   }
 }

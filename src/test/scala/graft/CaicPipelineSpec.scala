@@ -245,28 +245,83 @@ class CaicPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("one CaicJob.runOnce launches exactly one Spark job") {
+  private val fetcher = new graft.caic.CaicJob.Fetcher {
+    def fetch(url: String): String =
+      if (url.contains("%2Fproducts%2Fall%2Farea")) areasJson else productsJson
+  }
+
+  /** Runs `body` with a `QueryExecutionListener` attached and returns the
+    * query executions of the actions it ran, with the Spark jobs they
+    * launched. */
+  private def actions(body: => Unit)
+      : (Seq[org.apache.spark.sql.execution.QueryExecution], Int) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import graft.caic.{CaicJob, GraftConfig}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
+    val jobListener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     }
-    val fetcher = new CaicJob.Fetcher {
-      def fetch(url: String): String =
-        if (url.contains("%2Fproducts%2Fall%2Farea")) areasJson else productsJson
+    val qes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val qeListener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = qes.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = qes.add(qe)
     }
-    var submitted = ""
-    val submitter = new CaicJob.Submitter { def submit(body: String): Unit = submitted = body }
     val sc = spark.sparkContext
     org.apache.spark.ListenerBusSync.waitUntilEmpty(sc)
-    sc.addSparkListener(listener)
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(qeListener)
     try {
-      CaicJob.runOnce(spark, fetcher, submitter, GraftConfig(debug = false, "-", "-"))
+      body
       org.apache.spark.ListenerBusSync.waitUntilEmpty(sc)
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get === 1)
+    } finally {
+      spark.listenerManager.unregister(qeListener)
+      sc.removeSparkListener(jobListener)
+    }
+    (qes.toArray(Array.empty[QueryExecution]).toSeq, jobs.get)
+  }
+
+  test("one CaicJob.runOnce launches no Spark job: its one action scans a local table") {
+    import org.apache.spark.sql.execution.LocalTableScanExec
+    import graft.caic.{CaicJob, GraftConfig}
+    var submitted = ""
+    val submitter = new CaicJob.Submitter { def submit(body: String): Unit = submitted = body }
+    var returned = ""
+    val (qes, jobs) = actions {
+      returned = CaicJob.runOnce(spark, fetcher, submitter, GraftConfig(debug = false, "-", "-"))
+    }
+    assert(jobs === 0)
+    assert(qes.size === 1)
+    // the whole invocation was folded on the driver: an unevaluable
+    // expression would leave a Project above the scan, and a job per call
+    val executed = qes.head.executedPlan
+    assert(executed.isInstanceOf[LocalTableScanExec] && executed.children.isEmpty,
+      executed.treeString)
+    assert(returned === submitted)
     assert(mapper.readTree(submitted).get("features").size() === 4)
+  }
+
+  test("a conf change re-plans the prepared invocation instead of reusing it") {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode}
+    import graft.caic.{CaicJob, GraftConfig}
+    // every Cast, implicit or explicit, records the ANSI setting it was
+    // analyzed under
+    def evalModes(qe: org.apache.spark.sql.execution.QueryExecution) =
+      qe.analyzed.flatMap(_.expressions.flatMap(_.collect { case c: Cast => c.evalMode })).toSet
+    val submitter = new CaicJob.Submitter { def submit(body: String): Unit = () }
+    def invoke(ansi: Boolean) = {
+      spark.conf.set("spark.sql.ansi.enabled", ansi.toString)
+      val (qes, _) = actions {
+        CaicJob.runOnce(spark, fetcher, submitter, GraftConfig(debug = false, "-", "-"))
+      }
+      assert(qes.size === 1)
+      qes.head
+    }
+    try {
+      assert(evalModes(invoke(ansi = true)) === Set(EvalMode.ANSI))
+      assert(evalModes(invoke(ansi = false)) === Set(EvalMode.LEGACY))
+      assert(evalModes(invoke(ansi = true)) === Set(EvalMode.ANSI))
+    } finally spark.conf.unset("spark.sql.ansi.enabled")
   }
 
   test("an areaId matching no area, and an empty features array, drop the row under ANSI") {

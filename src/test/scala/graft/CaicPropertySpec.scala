@@ -114,6 +114,96 @@ class CaicPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out.size == expectedRows)
   }
 
+  // ------------------------------------------------ generated document pairs
+
+  /** Area ids come from a small pool so duplicates are common; a numeric
+    * id is written as a JSON number or as a string, which join alike. */
+  private val idPool = Seq("7", "8", "a", "b")
+  private val idGen: Gen[String] = Gen.frequency(
+    (8, Gen.oneOf(idPool).flatMap(id =>
+      if (id.forall(_.isDigit)) Gen.oneOf(id, "\"" + id + "\"") else Gen.const("\"" + id + "\""))),
+    (1, Gen.const("null")))
+
+  private val geometryGen: Gen[String] = Gen.frequency(
+    (6, for {
+      base <- Gen.oneOf("Polygon", "LineString")
+      multi <- Gen.oneOf(true, false)
+      k <- Gen.choose(1, 3)
+      parts <- Gen.listOfN(k, partGen)
+    } yield if (multi) s"""{"type":"Multi$base","coordinates":${parts.mkString("[", ",", "]")}}"""
+      else s"""{"type":"$base","coordinates":${parts.head}}"""),
+    (1, Gen.oneOf("null", "\"flat\"", """{"coordinates":[1,2]}""")))
+
+  private val areaGen: Gen[String] = for {
+    id <- idGen
+    g <- geometryGen
+    name <- Gen.oneOf("{}", """{"name":"zone"}""")
+  } yield s"""{"type":"Feature","id":$id,"properties":$name,"geometry":$g}"""
+
+  /** A day-0 band: a rating (known or not) or a missing key. */
+  private def band(name: String): Gen[Option[String]] =
+    ratingGen.map(r => Option(r).map(v => s""""$name":"$v""""))
+
+  private val productGen: Gen[String] = Gen.frequency(
+    (8, for {
+      areaId <- Gen.frequency((6, Gen.oneOf(idPool).map("\"" + _ + "\"")),
+        (1, Gen.const("\"orphan\"")), (1, Gen.const("null")))
+      bands <- Gen.sequence[List[Option[String]], Option[String]](
+        Seq(band("alp"), band("tln"), band("btl")))
+      summaryDays <- Gen.oneOf("[]",
+        """[{"date":"d","content":"quote \" and \"geometry\": inside"}]""",
+        """[{"date":"d","content":"calm"},{"date":"e","content":"day2"}]""")
+      ratingDays <- Gen.oneOf(true, true, true, false).map(nonEmpty =>
+        if (nonEmpty) bands.flatten.mkString("[{", ",", "}]") else "[]")
+      hasRatings <- Gen.frequency((9, true), (1, false))
+    } yield s"""{"type":"avalancheforecast","id":"f","publicName":"P","polygons":[],
+       |"areaId":$areaId,"forecaster":"x","issueDateTime":"t","expiryDateTime":"u",
+       |"isTranslated":false,"weatherSummary":null,
+       |"avalancheSummary":{"days":$summaryDays}""".stripMargin +
+      (if (hasRatings) s""","dangerRatings":{"days":$ratingDays}}""" else "}")),
+    (1, Gen.const("""{"type":"regionaldiscussion","id":"d","publicName":"Snowpack"}""")))
+
+  private val documentPairGen: Gen[(String, String)] = for {
+    n <- Gen.choose(0, 8)
+    areas <- Gen.listOfN(n, areaGen)
+    m <- Gen.choose(0, 8)
+    products <- Gen.listOfN(m, productGen)
+  } yield (areas.mkString("""{"type":"FeatureCollection","features":[""", ",", "]}"),
+    products.mkString("[", ",", "]"))
+
+  test("runOnce's document equals toFeatureCollection(run) as a multiset of features") {
+    import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+    import graft.caic.{CaicJob, GraftConfig}
+    val mapper = new ObjectMapper()
+    def features(doc: String): Map[JsonNode, Int] = {
+      val fs = mapper.readTree(doc).get("features")
+      (0 until fs.size()).map(fs.get).groupBy(identity).map { case (k, v) => k -> v.size }
+    }
+    val config = GraftConfig(debug = false, "-", "-")
+    var emitted, multiParts = 0
+    // documents that do not parse as the schema expects come first
+    val malformed = Seq(("not json", "[]"), ("{}", "{}"), ("""{"features":7}""", "not json"))
+    (malformed ++ sample(documentPairGen, 120)).foreach { case (areas, products) =>
+      val fetcher = new CaicJob.Fetcher {
+        def fetch(url: String): String =
+          if (url.contains("%2Fproducts%2Fall%2Farea")) areas else products
+      }
+      var submitted = ""
+      val submitter = new CaicJob.Submitter { def submit(body: String): Unit = submitted = body }
+      val doc = CaicJob.runOnce(spark, fetcher, submitter, config)
+      assert(doc == submitted)
+      val expected = CaicPipeline.toFeatureCollection(CaicPipeline.run(spark, areas, products))
+      assert(features(doc) == features(expected), s"areas=$areas\nproducts=$products")
+      val ids = features(doc).toSeq.flatMap { case (f, n) => Seq.fill(n)(f.get("id").asText()) }
+      emitted += ids.size
+      multiParts += ids.count(_.matches("caic-[^-]+-[0-9]+"))
+    }
+    // the generator must reach the emitting paths, Multi parts included,
+    // not only the drops
+    assert(emitted > 50, emitted)
+    assert(multiParts > 10, multiParts)
+  }
+
   test("fingerprint is invariant under punctuation/whitespace/case noise") {
     import spark.implicits._
     val texts = sample(Gen.listOfN(6,
