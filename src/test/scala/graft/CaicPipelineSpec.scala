@@ -281,7 +281,7 @@ class CaicPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     (qes.toArray(Array.empty[QueryExecution]).toSeq, jobs.get)
   }
 
-  test("one CaicJob.runOnce launches no Spark job: its one action scans a local table") {
+  test("one CaicJob.runOnce launches no Spark job, only a local scan") {
     import org.apache.spark.sql.execution.LocalTableScanExec
     import graft.caic.{CaicJob, GraftConfig}
     var submitted = ""
