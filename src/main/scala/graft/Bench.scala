@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 object Bench {
 
@@ -228,22 +227,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // environment contract: local[32], shuffle.partitions=32 (not 200)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // the session extension surface (optimizer rule, SQL functions,
-      // r16 view DDL) is part of the product — bench what users run
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // dev loop: SPARK_GRAFT_REPLAYABLE=false times the xxhash64
-      // production hash family (graft.HashFamilies) — the driver never
-      // sets it, so its boards always run the oracle-replayable default
-      .config("spark.graft.replayableHashes",
-        sys.env.getOrElse("SPARK_GRAFT_REPLAYABLE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(defaultCpus = 32)
     // untimed warmup (the ScaleSmoke100 warmed-leg policy applied to the
     // committed board artifact — r11 verdict item 6): JIT/codegen/
     // parquet-footer costs land here, not on the alphabetically-first

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round tooling: dump `.explain("formatted")` for declared
   * queries to files, under the exact session configuration the bench
   * runs with, so plan claims in OPTIMIZATION_r*.md are checkable.
@@ -14,17 +12,7 @@ object PlanDump {
     val suffix = args.lift(1).getOrElse("before")
     val only = args.lift(2).map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.graft.replayableHashes",
-        sys.env.getOrElse("SPARK_GRAFT_REPLAYABLE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(defaultCpus = 32)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => NameFilter.selected(only, n) }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round tooling: run ONE declared query under the bench
   * session and print every Spark job's wall time + call site, plus the
@@ -15,25 +14,7 @@ object ProfileProbe {
     val name = args.headOption.getOrElse(sys.error("query name required"))
     val repeats = args.lift(1).map(_.toInt).getOrElse(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.graft.replayableHashes",
-        sys.env.getOrElse("SPARK_GRAFT_REPLAYABLE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // A/B experiment seam: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" (session-settable
-    // confs only) — lets one probe run test a candidate conf without edits
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty => spark.conf.set(k, v)
-        case _ => () // blank/malformed token (e.g. an unset shell var)
-      }
-    })
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(defaultCpus = 32)
     case class Job(id: Int, desc: String, start: Long, var end: Long = 0L,
       var stages: Int = 0)
     val jobs = scala.collection.mutable.LinkedHashMap[Int, Job]()

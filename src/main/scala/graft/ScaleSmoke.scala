@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-stress smoke for the dedup/pack chains beyond the driver's
@@ -91,18 +91,7 @@ object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val baseDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outRoot = if (args.length > 1) args(1) else "/tmp/graft_scale10x"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // driver memory comes from the launching JVM (sbt -mem / SBT_OPTS)
-      // — setting spark.driver.memory here would be a silent no-op in
-      // local mode (the driver JVM is already running)
-      .appName("graft-scale-smoke")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(defaultCpus = 32)
     val json = new StringBuilder("{")
     try {
       val dir10 = s"$outRoot/sf1x10"

@@ -40,15 +40,7 @@ object ScaleSmoke100 {
   def main(args: Array[String]): Unit = {
     val baseDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outRoot = if (args.length > 1) args(1) else "/tmp/graft_scale100x"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-scale-smoke-100x")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(defaultCpus = 32)
     val json = new StringBuilder("{")
     try {
       val base = spark.read.parquet(s"$baseDir/documents.parquet")

@@ -61,7 +61,7 @@ object CaicPipeline {
     * feature, keyed by stringified id, with last-wins dedup on duplicate
     * ids (task.ts:97-100). Features with a null id dedup among themselves
     * like any other id: the last one survives. */
-  def areaFeatures(spark: SparkSession, fcJson: DataFrame): DataFrame =
+  def areaFeatures(fcJson: DataFrame): DataFrame =
     fcJson
       .select(from_json(col("value"), featureCollectionType, jsonOpts)("features").as("fs"))
       .select(col("fs"), posexplode(col("fs")).as(Seq("pos", "f")))

@@ -1371,7 +1371,7 @@ object Dedup {
     // there (r7); q125's prefix join yields ~310k candidates at the
     // same SF, where the exploded form pays two joins plus a groupBy
     // over Σ|A| rows — the array walk verify measured 2.20 → 1.04 s
-    // (PrefixJoinProfileProbe, PERF.md r12). |toks| == |shingles|
+    // (PERF.md "r12: q125's verify stage"). |toks| == |shingles|
     // (collect_list keeps all hashes), so the sizes come free as
     // size(ta)/size(tb) and the two size-attach joins disappear too.
     // Hash-collision policy unchanged from q30/q31 (2^-64 per pair,

@@ -775,7 +775,7 @@ object Advanced {
     // spark.graft.triangleCloseBloom (default off — the replayableHashes
     // conf-seam pattern): a driver-built dense Bloom bitset over the
     // oriented edge set, probed map-side per wedge. Measured at local[32]
-    // sf0.1 (TriangleProfileProbe, PERF.md r11): cuts 94% of the 41 M
+    // sf0.1 (PERF.md "r11: q129 closing-join bloom prefilter"): cuts 94% of the 41 M
     // wedge rows before the shuffle but is NET-NEUTRAL on wall there —
     // 2x xxhash64 per wedge ≈ the local shuffle it saves — so it stays
     // OFF for the board; on a real cluster the closing join's shuffle is

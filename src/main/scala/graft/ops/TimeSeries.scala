@@ -458,7 +458,7 @@ object TimeSeries {
     graft.functions.GeoFunctions.register(spark)
     val cell = 0.5
     val areas = graft.caic.CaicPipeline
-      .areaFeatures(spark, Seq(graft.caic.CaicFixtures.areasJson).toDF("value"))
+      .areaFeatures(Seq(graft.caic.CaicFixtures.areasJson).toDF("value"))
       .select(col("id").cast("string").as("area_id"),
         graft.functions.GeoFunctions.envelope(col("geometry")).as("env"))
       .select(col("area_id"), col("env.xmin").as("xmin"), col("env.ymin").as("ymin"),
@@ -510,7 +510,7 @@ object TimeSeries {
     graft.functions.GeoFunctions.register(spark)
     val cell = 0.5
     val areas = graft.caic.CaicPipeline
-      .areaFeatures(spark, Seq(graft.caic.CaicFixtures.areasJson).toDF("value"))
+      .areaFeatures(Seq(graft.caic.CaicFixtures.areasJson).toDF("value"))
       .select(col("id").cast("string").as("area_id"), col("geometry"),
         graft.functions.GeoFunctions.envelope(col("geometry")).as("env"))
       .select(col("area_id"), col("geometry"),
@@ -585,7 +585,7 @@ object TimeSeries {
         .select(df.columns.map(col) :+ col("env.xmin") :+ col("env.ymin") :+
           col("env.xmax") :+ col("env.ymax"): _*)
     val areas = withEnv(graft.caic.CaicPipeline
-      .areaFeatures(spark, Seq(graft.caic.CaicFixtures.areasJson).toDF("value"))
+      .areaFeatures(Seq(graft.caic.CaicFixtures.areasJson).toDF("value"))
       .select(col("id").cast("string").as("area_id"), col("geometry")), "geometry")
       .withColumnRenamed("xmin", "axmin").withColumnRenamed("ymin", "aymin")
       .withColumnRenamed("xmax", "axmax").withColumnRenamed("ymax", "aymax")

@@ -224,7 +224,7 @@ object AnnIndex {
     val head = JsonDocVersions.latestVersion(basePath).getOrElse(0)
     val d0 = IndexDef(new java.io.File(basePath).getAbsolutePath,
       centroids, head, pq)
-    // MERGE-ON-READ postings (r17, AnnScaleProbe's finding): an upsert
+    // MERGE-ON-READ postings (r17, PERF.md "AnnIndex refresh"): an upsert
     // delta's keys spread across cells, so a copy-on-write MERGE would
     // rewrite ~every cell's files even for a tiny delta — the q183 MV
     // amplification problem. MOR lands delete vectors + insert files in

@@ -629,7 +629,7 @@ object Similarity {
   private val PqSubDim = 8    // dims per subspace (8 x 8 = 64)
   private val PqK = 16        // centroids per subspace codebook
   // ADC candidates kept for exact re-rank. Sized by measurement, not
-  // guess (MeasurePqRecall): a FIXED 50-candidate shortlist held
+  // guess (PERF.md "r9: PQ recall measured"): a FIXED 50-candidate shortlist held
   // recall@10 at 8/10 on 500-5k vectors but collapsed to 3/10 at 50k —
   // a growing corpus packs more quantization-noise impostors above the
   // true neighbors, so the shortlist must grow to keep the impostor

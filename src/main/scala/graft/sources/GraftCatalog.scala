@@ -1710,6 +1710,12 @@ object GraftCatalog {
       bin.length > 1 || bin.exists { case (n, _) =>
         dvPos.contains(n) || eqPathsOf(n).nonEmpty }
     if (!bins.exists(needsRewrite)) return None
+    // a LEGACY (manifest-less) directory: its live set is the listing,
+    // minted here as the first manifest — the delta commit below must
+    // retire inputs that a manifest names as live (the batch path's
+    // bootstrap rule, r14)
+    if (JsonDocVersions.latest(path).isEmpty)
+      JsonDocVersions.commit(path, live.toSet, op = "bootstrap")
     val v = JsonDocVersions.latestManifestVersion(path) + 1
     val stats = JsonDocStats.load(path)
     // declared bloom columns (r16): rebuilt EXACTLY inside the rewrite
@@ -1941,7 +1947,7 @@ object GraftCatalog {
     * recorded by the clustered write itself) prunes the group-filter
     * pre-scan too. An unclustered view has every key in every file, so
     * the same delta rewrites the whole table — the q183 scaladoc's
-    * named hazard, measured in MvClusterProbe/PERF.md.
+    * named hazard, measured in PERF.md "r13: MV copy-on-write amplification".
     *
     * Execution is fully distributed: the scan reads the current
     * snapshot, `repartitionByRange` range-splits on executors (one

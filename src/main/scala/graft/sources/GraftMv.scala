@@ -69,8 +69,8 @@ import scala.jdk.CollectionConverters._
   * 100 TB: a refresh reads the feed of `(last, head]` only — commits'
   * changed files, never the base — and MERGEs |changed groups| rows;
   * the backing table is an ordinary graft table, so clustering
-  * (`CALL cluster`) bounds MERGE amplification exactly as q183's
-  * MvClusterProbe measures. Reference: the whole job of
+  * (`CALL cluster`) bounds MERGE amplification exactly as measured for
+  * q183 (PERF.md "r13: MV copy-on-write amplification"). Reference: the whole job of
   * /root/reference/task.ts (lines 85-190) is maintaining a derived
   * output from a source feed — this is that contract as DDL. */
 private[graft] object GraftMv {
@@ -1236,8 +1236,8 @@ private[graft] object GraftMv {
     if (dataDir.isDirectory) deleteRecursively(dataDir)
     sweepDistDirs(dataDir)
     val head = JsonDocVersions.latestVersion(d.basePath).getOrElse(0)
-    // MERGE-ON-READ backing (r17, the AnnScaleProbe lesson applied
-    // here too): a refresh's changed groups spread across files, so a
+    // MERGE-ON-READ backing (r17, the ANN index lesson of PERF.md
+    // "AnnIndex refresh" applied here too): a refresh's changed groups spread across files, so a
     // copy-on-write MERGE would rewrite ~the whole view for any
     // non-local delta; MOR folds land as delete vectors + inserts in
     // O(changed groups), with OPTIMIZE as the periodic repayment

@@ -926,7 +926,7 @@ object StreamingBoard {
     * KEY-CLUSTERED with [[graft.sources.GraftCatalog.cluster]] (r13:
     * the distributed range-rewrite maintenance op; run periodically,
     * like Iceberg rewrite_data_files with a sort spec). Measured in
-    * MvClusterProbe/PERF.md: a localized delta rewrites ~2 of 16
+    * PERF.md "r13: MV copy-on-write amplification": a localized delta rewrites ~2 of 16
     * clustered files per epoch vs 100% of a uniform layout every
     * epoch, identical folded state — and RowLevelOpsSpec pins the
     * 1-of-8 vs 8-of-8 contrast. The fold itself never re-reads the
@@ -1055,7 +1055,7 @@ object StreamingBoard {
       " TBLPROPERTIES ('write.rowlevel.mode' = 'merge-on-read')")
 
   /** q188: the q183 incremental MV with a KEY-CLUSTERING maintenance
-    * pass in the MIDDLE of its life (r13 — the MvClusterProbe claim as
+    * pass in the MIDDLE of its life (r13 — the clustered-MV claim as
     * an oracle row): fold epoch 0, `GraftCatalog.cluster` the view into
     * user_id range files (one atomic truncate-commit; the manifest
     * carries the applied-epoch txn map forward, so the replay guard

@@ -37,8 +37,8 @@ import graft.sources.{GraftTxn, JsonDocVersions}
   * = old terms minus new terms; puts = the new postings; one MERGE
   * keyed `(doc_id, term)` lands both — exactly-once via the ledger,
   * merge-on-read so the fold writes delete vectors + inserts in
-  * O(changed docs' tokens) and rewrites nothing (the AnnScaleProbe
-  * lesson). Intermediate states a doc passed through WITHIN the range
+  * O(changed docs' tokens) and rewrites nothing (the ANN index lesson,
+  * PERF.md "AnnIndex refresh"). Intermediate states a doc passed through WITHIN the range
   * never existed in the index and never produce postings.
   *
   * SEARCH replays q101's exact BM25 (k1 = 1.2, b = 0.75, the 6-decimal

@@ -87,7 +87,7 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(cnt === n, s"upsert fold must keep the corpus complete: $cnt vs $n")
     // DELTA-proportionality: merge-on-read postings rewrite NOTHING —
     // the fold lands delete vectors + insert files only (r17,
-    // AnnScaleProbe's finding: COW would rewrite ~every cell because
+    // PERF.md "AnnIndex refresh": COW would rewrite ~every cell because
     // upsert keys spread across cells)
     val filesAfter = graft.sources.JsonDocVersions.latest(postings).get._2
     val kept = filesAfter.intersect(filesBefore)

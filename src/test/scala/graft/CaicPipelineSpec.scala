@@ -235,7 +235,7 @@ class CaicPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.execution.window.WindowExec
     val areasOnly = {
       import spark.implicits._
-      CaicPipeline.areaFeatures(spark, Seq(areasJson).toDF("value"))
+      CaicPipeline.areaFeatures(Seq(areasJson).toDF("value"))
     }
     for (df <- Seq(CaicPipeline.run(spark, areasJson, productsJson), areasOnly)) {
       val nodes = plan(df)
@@ -364,7 +364,7 @@ class CaicPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       area("null", """{"type":"Point","coordinates":[3,3]}"""),
       area("\"a\"", """{"type":"Point","coordinates":[4,4]}"""),
       area("5", """{"type":"Point","coordinates":[5,5]}"""))
-    val got = CaicPipeline.areaFeatures(spark, Seq(areas).toDF("value")).collect()
+    val got = CaicPipeline.areaFeatures(Seq(areas).toDF("value")).collect()
       .map(r => Option(r.getAs[String]("id")) ->
         mapper.readTree(r.getAs[String]("geometry")).get("coordinates").get(0).asInt())
     assert(got.toMap === Map(None -> 3, Some("a") -> 4, Some("5") -> 5))

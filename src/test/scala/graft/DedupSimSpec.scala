@@ -125,7 +125,7 @@ class DedupSimSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
     assert(pq.length == 10)
     // the 32x-compressed codes only have to steer the SHORTLIST; the
-    // exact refine pass does the final ranking. MeasurePqRecall:
+    // exact refine pass does the final ranking. PERF.md "r9: PQ recall measured":
     // 10/10 here (sf0.01) and at sf0.001, 9/10 at sf0.1 with the
     // 256-candidate shortlist (50 had collapsed to 3/10 at sf0.1)
     val overlap = (exact intersect pq.map(_._1).toSet).size

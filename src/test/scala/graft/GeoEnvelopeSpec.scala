@@ -106,7 +106,7 @@ class GeoEnvelopeSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     graft.functions.GeoFunctions.register(spark)
     val areas = graft.caic.CaicPipeline
-      .areaFeatures(spark, Seq(graft.caic.CaicFixtures.areasJson).toDF("value"))
+      .areaFeatures(Seq(graft.caic.CaicFixtures.areasJson).toDF("value"))
       .select(org.apache.spark.sql.functions.col("id"),
         graft.functions.GeoFunctions.envelope(
           org.apache.spark.sql.functions.col("geometry")).as("e"))

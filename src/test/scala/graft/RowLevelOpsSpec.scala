@@ -613,4 +613,118 @@ class RowLevelOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.sql(s"SELECT a FROM $tbl3").collect().map(_.getLong(0)).toSeq
       === Seq(1L), "a refused drop must leave the table fully intact")
   }
+
+  test("distributed OPTIMIZE writes byte-identical files to the serial driver fallback") {
+    // with an active session each bin is concatenated in an executor
+    // task; with none, on the driver. The distribution changes WHERE a
+    // bin is built, never what it contains or what it is named
+    import graft.sources.{GraftCatalog, JsonDocVersions}
+    def stage(): String = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_optdist").toString
+      (0 until 12).foreach { i =>
+        val lines = (0 until 50).map { r =>
+          val id = i * 50L + r
+          s"""{"doc_id":$id,"lang":"en","n_chars":${100 + id % 900}}\n"""
+        }
+        java.nio.file.Files.writeString(
+          java.nio.file.Paths.get(dir, f"part-$i%05d.jsonl"), lines.mkString)
+      }
+      dir
+    }
+    val (dist, serial) = (stage(), stage())
+    val target = new java.io.File(dist).listFiles().filter(_.isFile).map(_.length()).sum / 4
+    SparkSession.setActiveSession(spark)
+    var jobs = 0
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        synchronized { jobs += 1 }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try assert(GraftCatalog.optimize(dist, target).isDefined)
+    finally {
+      org.apache.spark.ListenerBusSync.waitUntilEmpty(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs >= 1, "the distributed leg must build its bins in Spark tasks")
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val v = try GraftCatalog.optimize(serial, target)
+    finally {
+      SparkSession.setActiveSession(spark)
+      SparkSession.setDefaultSession(spark)
+    }
+    assert(v.isDefined)
+    def live(dir: String): Seq[String] = JsonDocVersions.latest(dir).get._2.toSeq.sorted
+    assert(live(dist) === live(serial))
+    assert(live(dist).size < 12, s"nothing was compacted: ${live(dist)}")
+    live(dist).foreach { n =>
+      def bytes(dir: String) = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(dir, n)).toSeq
+      assert(bytes(dist) === bytes(serial), s"$n differs between the two paths")
+    }
+  }
+
+  test("partitioned-clustered and merge-on-read views fold MERGE deltas to the clustered view's state") {
+    // the companion of the clustered-vs-uniform case above: layout (a
+    // partition-local range clustering, or merge-on-read over the
+    // worst-case uniform layout) changes the WRITE SET, never the answer
+    spark.conf.set("spark.sql.catalog.graftcat",
+      classOf[graft.sources.GraftCatalog].getName)
+    import spark.implicits._
+    import graft.sources.{GraftCatalog, JsonDocVersions}
+    def liveSet(path: String): Set[String] =
+      JsonDocVersions.latest(path).map(_._2).getOrElse(Set.empty)
+    def root(tag: String) = java.nio.file.Files.createTempDirectory(s"graft_mvfold_$tag").toString
+    val all = (0L until 400L).map(u => (u, u % 4, 10L)).toDF("user_id", "shard", "n_events")
+    // two contiguous delta windows; the second runs past the base keys,
+    // so it both updates and inserts
+    val windows = Seq(100L until 200L, 350L until 450L)
+    def mergeInto(tbl: String, e: Int, withShard: Boolean): Unit = {
+      windows(e).map(u => (u, u % 4, 1L)).toDF("user_id", "shard", "n_events")
+        .createOrReplaceTempView("fold_delta")
+      val insert = if (withShard) "INSERT (user_id, shard, n_events) " +
+        "VALUES (d.user_id, d.shard, d.n_events)"
+        else "INSERT (user_id, n_events) VALUES (d.user_id, d.n_events)"
+      spark.sql(s"MERGE INTO $tbl t USING fold_delta d ON t.user_id = d.user_id " +
+        "WHEN MATCHED THEN UPDATE SET n_events = t.n_events + d.n_events " +
+        s"WHEN NOT MATCHED THEN $insert")
+    }
+
+    val rootC = root("clu")
+    val tblC = s"graftcat.`$rootC/mv`"
+    spark.sql(s"CREATE TABLE $tblC (user_id BIGINT, n_events BIGINT) USING `graft-jsondoc`")
+    all.select("user_id", "n_events").coalesce(1).writeTo(tblC).append()
+    GraftCatalog.cluster(spark, tblC, "user_id", 8)
+
+    val rootP = root("part")
+    val tblP = s"graftcat.`$rootP/mv`"
+    spark.sql(s"CREATE TABLE $tblP (user_id BIGINT, shard BIGINT, n_events BIGINT) " +
+      "USING `graft-jsondoc` PARTITIONED BY (shard)")
+    all.writeTo(tblP).append()
+    GraftCatalog.cluster(spark, tblP, "user_id", 8, path = s"$rootP/mv")
+
+    val rootM = root("mor")
+    val tblM = s"graftcat.`$rootM/mv`"
+    spark.sql(s"CREATE TABLE $tblM (user_id BIGINT, n_events BIGINT) " +
+      "USING `graft-jsondoc` TBLPROPERTIES ('write.rowlevel.mode' = 'merge-on-read')")
+    (0 until 8).foreach(r => all.filter($"user_id" % 8 === r)
+      .select("user_id", "n_events").coalesce(1).writeTo(tblM).append())
+
+    windows.indices.foreach { e =>
+      mergeInto(tblC, e, withShard = false)
+      mergeInto(tblP, e, withShard = true)
+      val before = liveSet(s"$rootM/mv")
+      mergeInto(tblM, e, withShard = false)
+      assert((before -- liveSet(s"$rootM/mv")).isEmpty,
+        s"epoch $e: a merge-on-read MERGE must rewrite no data file")
+    }
+    def state(tbl: String): Seq[(Long, Long)] =
+      spark.sql(s"SELECT user_id, n_events FROM $tbl ORDER BY user_id")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val expected = (0L until 450L).map { u =>
+      (u, if (u >= 400) 1L else if (windows.exists(_.contains(u))) 11L else 10L)
+    }
+    assert(state(tblC) === expected)
+    assert(state(tblP) === expected)
+    assert(state(tblM) === expected)
+  }
 }

@@ -288,6 +288,48 @@ class SourceSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"no runtime filter planted:\n${joined.queryExecution.executedPlan}\n--- optimized:\n${joined.queryExecution.optimizedPlan}")
   }
 
+  test("runtime filtering on and off give the same join answer, scattered or file-local keys") {
+    // the runtime In filter drops non-joining lines at parse time and,
+    // through the stats sidecar, skips whole files; either way it may
+    // only change what is READ, never the answer
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_rtf").toString
+    // 4 files written through the V2 writer (so the stats sidecar
+    // exists), each owning a contiguous doc_id range
+    spark.range(400).select(col("id").as("doc_id"), lit("en").as("lang"),
+      (lit(100) + col("id") % 90).as("n_chars"))
+      .repartitionByRange(4, col("doc_id"))
+      .write.format("graft-jsondoc").option("path", dir).mode("append").save()
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("lang", org.apache.spark.sql.types.StringType),
+      org.apache.spark.sql.types.StructField("n_chars", org.apache.spark.sql.types.LongType)))
+    // parquet dims, so the selective filter survives optimization (a
+    // LocalRelation folds it away and no runtime filter is planned):
+    // every 10th key hits every file; keys 100..139 sit in one file
+    def dim(keep: Long => Boolean): String = {
+      val p = java.nio.file.Files.createTempDirectory("graft_rtf_dim").toString
+      (0L until 400L).map(i => (i, if (keep(i)) "keep" else "drop"))
+        .toDF("doc_id", "cat").write.mode("overwrite").parquet(p)
+      p
+    }
+    val key = "spark.sql.optimizer.dynamicPartitionPruning.enabled"
+    for ((dimPath, keys) <- Seq(
+        dim(_ % 10 == 0) -> (0L until 400L by 10),
+        dim(i => i >= 100 && i < 140) -> (100L until 140L))) {
+      def run(on: Boolean): (Long, Long) = {
+        spark.conf.set(key, on)
+        val r = spark.read.format("graft-jsondoc").schema(schema).option("path", dir).load()
+          .join(spark.read.parquet(dimPath).filter(col("cat") === "keep"), "doc_id")
+          .agg(count(lit(1)), sum(col("n_chars"))).head()
+        (r.getLong(0), r.getLong(1))
+      }
+      val (on, off) = try (run(on = true), run(on = false)) finally spark.conf.unset(key)
+      assert(on === off, s"runtime filtering changed the answer: $on vs $off")
+      assert(on === (keys.size.toLong, keys.map(k => 100L + k % 90).sum))
+    }
+  }
+
   test("corrupt response line fails the scan fast (§2A-21, no partial output)") {
     import java.nio.file.{Files, Paths}
     val dir = Files.createTempDirectory("graft_corrupt").toString

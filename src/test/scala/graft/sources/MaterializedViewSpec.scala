@@ -77,7 +77,7 @@ class MaterializedViewSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(stale === 3L, s"three unfolded commits expected, got $stale")
 
     // merge-on-read backing: the fold lands DVs + inserts, rewriting
-    // no prior backing file (the AnnScaleProbe amplification lesson)
+    // no prior backing file (PERF.md "AnnIndex refresh": the amplification lesson)
     val backing = s"$wh/db/m.mvdata"
     val beforeFold = JsonDocVersions.latest(backing).get._2
     val ref = spark.sql("CALL graftcat.refresh_mv('db.m')").collect()(0)

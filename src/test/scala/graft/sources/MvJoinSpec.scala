@@ -322,4 +322,48 @@ class MvJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ref = spark.sql("CALL graftcat.refresh_mv('dbjx.mm')").collect()(0)
     assert(ref.getLong(0) > ref.getLong(1), s"no-op refresh expected: $ref")
   }
+
+  test("2- and 3-table join folds land on the merge-on-read backing: no prior file rewritten") {
+    // every fold must equal the recompute AND leave each backing file of
+    // the previous state in place (delete vectors + inserts, O(delta))
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.dbjb")
+    val root = java.nio.file.Files.createTempDirectory("graft_mvjb").toString
+    val to = s"graftcat.`$root/o`"
+    val tc = s"graftcat.`$root/c`"
+    val tn = s"graftcat.`$root/n`"
+    Seq(s"$to (o_ok BIGINT, o_ck BIGINT, cents BIGINT)",
+        s"$tc (c_ck BIGINT, c_nk BIGINT)",
+        s"$tn (n_nk BIGINT, n_name STRING)").foreach { t =>
+      spark.sql(s"CREATE TABLE $t USING `graft-jsondoc` " +
+        "TBLPROPERTIES ('write.rowlevel.mode' = 'merge-on-read')")
+    }
+    spark.range(300).selectExpr("id AS o_ok", "id % 40 AS o_ck", "id * 7 AS cents")
+      .writeTo(to).append()
+    spark.range(40).selectExpr("id AS c_ck", "id % 5 AS c_nk").writeTo(tc).append()
+    spark.range(5).selectExpr("id AS n_nk", "concat('n', id) AS n_name").writeTo(tn).append()
+    val bodies = Map(
+      "m2" -> (s"SELECT c_nk, count(*) AS cnt, sum(cents) AS s " +
+        s"FROM $to JOIN $tc ON o_ck = c_ck GROUP BY c_nk"),
+      "m3" -> (s"SELECT n_name, count(*) AS cnt, sum(cents) AS s " +
+        s"FROM $to JOIN $tc ON o_ck = c_ck JOIN $tn ON c_nk = n_nk GROUP BY n_name"))
+    bodies.foreach { case (m, b) =>
+      spark.sql(s"CREATE MATERIALIZED VIEW graftcat.dbjb.$m AS $b") }
+    val wh = spark.conf.get("spark.sql.catalog.graftcat.warehouse")
+    def fold(tag: String, dml: String, views: Seq[String]): Unit = {
+      val before = views.map(m => m -> JsonDocVersions.latest(s"$wh/dbjb/$m.mvdata").get._2).toMap
+      spark.sql(dml)
+      views.foreach { m =>
+        val r = spark.sql(s"CALL graftcat.refresh_mv('dbjb.$m')").collect()(0)
+        assert(r.getLong(0) <= r.getLong(1), s"[$tag] $m: a real fold expected: $r")
+        val after = JsonDocVersions.latest(s"$wh/dbjb/$m.mvdata").get._2
+        assert(after.intersect(before(m)) === before(m),
+          s"[$tag] $m: a MOR fold must keep every prior backing file")
+        assert(sortedRows(s"SELECT * FROM graftcat.dbjb.$m") === sortedRows(bodies(m)),
+          s"[$tag] $m: the fold must equal the recompute")
+      }
+    }
+    fold("facts", s"UPDATE $to SET cents = cents + 1 WHERE o_ok % 11 = 1", Seq("m2", "m3"))
+    fold("migrate", s"UPDATE $tc SET c_nk = (c_nk + 1) % 5 WHERE c_ck % 5 = 1", Seq("m2", "m3"))
+    fold("rename", s"UPDATE $tn SET n_name = concat('x_', n_name) WHERE n_nk = 0", Seq("m3"))
+  }
 }
