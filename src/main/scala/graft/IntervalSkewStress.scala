@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * (VERDICT r10 "Next round" #1). Run manually, results recorded in
   * PERF.md:
   *
-  *   sbt "runMain graft.IntervalSkewStress /tmp/graft_ivstress"
+  *   sbt "runMain graft.IntervalSkewStress"
   *
   * [[ops.TimeSeries.intervalOverlapPairs]] trades explode fan-out
   * (len/binUs + 1 rows per interval) against bucket occupancy (rows

@@ -71,7 +71,6 @@ object Dedup {
     * sf0.1 LSH chain; value- and order-identical, spec-pinned against
     * [[shinglesHofReference]]). */
   def shinglesOf(docs: DataFrame): DataFrame = {
-    graft.functions.ShingleFunctions.register(docs.sparkSession)
     docs
       .select(col("doc_id"),
         regexp_extract_all(lower(col("text")), lit("[a-z0-9]+"), lit(0)).as("ws"))
@@ -333,9 +332,11 @@ object Dedup {
         .select(col("src").as("v"), least(col("src"), col("mn")).as("lbl")))
     var changed = 1L
     var round = 0
-    // failure path (job error mid-round, maxRounds trip) drops every
-    // live cache before propagating — they are unregistered (round
-    // turnover), so the harness's Caches.drain() cannot reach a leak
+    // failure path (job error mid-round, maxRounds trip) drops the pair
+    // and edge caches before propagating: they are not registered with
+    // graft.Caches, so the harness's Caches.drain() could not reach
+    // them. Every round's checkpoint IS registered (truncateLineage),
+    // so drain() retires those
     try {
       while (changed > 0) {
         if (round >= maxRounds)
@@ -471,10 +472,11 @@ object Dedup {
     // to rule out a composition that maps e back to itself through two
     // non-trivial steps. A colliding non-fixpoint (2^-64) just fails the
     // confirmation and loops on; a fixpoint can never be missed.
-    // on ANY failure (job error mid-round, maxRounds trip) every live
-    // cache is dropped before propagating — these are unregistered with
-    // graft.Caches (they turn over every round), so the harness's
-    // drain() could not reach a leaked round otherwise
+    // on ANY failure (job error mid-round, maxRounds trip) the vertex
+    // cache is dropped before propagating: it is registered with
+    // graft.Caches only on success, so the harness's drain() could not
+    // reach it otherwise. Every round's checkpoint IS registered
+    // (truncateLineage), so drain() retires those
     var round = 0
     var converged = false
     try {
@@ -1104,6 +1106,11 @@ object Dedup {
     (MinhashPerms.map(_._1).toArray, MinhashPerms.map(_._2).toArray,
       MinhashPerms.map(_._3).toArray, MinhashMod)
 
+  /** One shared copy for the signature helpers: the expressions compare
+    * their constant arrays by reference, so two signature columns over
+    * this family stay semantically equal (exchange reuse, CSE). */
+  private val MinhashFamily = minhashFamily
+
   /** Signatures from an existing (doc_id, shingles) frame.
     *
     * The K hash family is md5-seeded affine permutations (r9; was
@@ -1129,20 +1136,16 @@ object Dedup {
     // the K per-permutation lambdas (3.2 s of q31's 5.7 at sf0.1) but
     // still paid an interpreted `transform` hash projection per shingle
     // plus a materialized struct array; this removes both. The hash-
-    // family seam (graft.HashFamilies) picks the variant name at plan
+    // family seam (graft.HashFamilies) picks the variant at plan
     // build: md5 halves (replayable, default — the DuckDB oracle
     // replays them) vs seeded xxhash64 (production). Bit-identical to
     // the two-step route for BOTH families; MinhashExpressionsSpec pins
     // the full ladder (fused-text ≡ struct-input native ≡ the K-lambda
     // HOF reference). */
-    graft.functions.MinhashFunctions.registerText(sh.sparkSession,
-      MinhashPerms.map(_._1).toArray, MinhashPerms.map(_._2).toArray,
-      MinhashPerms.map(_._3).toArray, MinhashMod)
-    val fn =
-      if (graft.HashFamilies.replayable(sh.sparkSession)) "minhash_sig_text_md5"
-      else "minhash_sig_text_xxh"
+    val (a, b, c, mod) = MinhashFamily
     sh.select(col("doc_id"), col("shingles"),
-      call_function(fn, col("shingles")).as("sig"))
+      graft.functions.MinhashFunctions.minhashSigText(col("shingles"), a, b, c, mod,
+        graft.HashFamilies.replayable(sh.sparkSession)).as("sig"))
   }
 
   /** The pre-r12 per-shingle hash projection for `family` ("md5" |
@@ -1162,11 +1165,9 @@ object Dedup {
     * native `minhash_sig`) — kept as the MIDDLE RUNG of the spec ladder
     * (fused-text ≡ struct-input ≡ K-lambda HOF reference). */
   private[graft] def minhashSignaturesStructRouteForSpec(shWithHp: DataFrame): DataFrame = {
-    graft.functions.MinhashFunctions.register(shWithHp.sparkSession,
-      MinhashPerms.map(_._1).toArray, MinhashPerms.map(_._2).toArray,
-      MinhashPerms.map(_._3).toArray, MinhashMod)
+    val (a, b, c, mod) = MinhashFamily
     shWithHp.select(col("doc_id"),
-      graft.functions.MinhashFunctions.minhashSig(col("hp")).as("sig"))
+      graft.functions.MinhashFunctions.minhashSig(col("hp"), a, b, c, mod).as("sig"))
   }
 
   /** The pre-r11 HOF formula for the signatures — kept as the
@@ -1377,7 +1378,6 @@ object Dedup {
     // Hash-collision policy unchanged from q30/q31 (2^-64 per pair,
     // and the DuckDB oracle would catch one materializing).
     val adj = e.groupBy(col("doc_id")).agg(sort_array(collect_list(col("s"))).as("toks"))
-    graft.functions.IntersectFunctions.register(spark)
     cands
       .join(adj.select(col("doc_id").as("id_a"), col("toks").as("ta")), Seq("id_a"))
       .join(adj.select(col("doc_id").as("id_b"), col("toks").as("tb")), Seq("id_b"))

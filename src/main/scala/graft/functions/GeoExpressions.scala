@@ -8,8 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGe
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType, StructField, StructType}
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.ExpressionColumns.{column, expression}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Shared evaluator for [[GeoEnvelope]] — a static entry point so the
@@ -472,23 +472,12 @@ object GeoFunctions {
     new ExpressionInfo(classOf[GeoDistance].getName, "geo_distance"),
     (args: Seq[Expression]) => GeoDistance(args(0), args(1), args(2), args(3)))
 
-  /** Idempotently register the geo functions on an existing session. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("geo_envelope", envelopeInfo._3, "scala_udf")
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("geo_contains", containsInfo._3, "scala_udf")
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("geo_intersects", intersectsInfo._3, "scala_udf")
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("geo_distance", distanceInfo._3, "scala_udf")
-  }
-
-  def envelope(g: Column): Column = call_function("geo_envelope", g)
+  def envelope(g: Column): Column = column(GeoEnvelope(expression(g)))
   def distance(lon1: Column, lat1: Column, lon2: Column, lat2: Column): Column =
-    call_function("geo_distance", lon1, lat1, lon2, lat2)
+    column(GeoDistance(expression(lon1), expression(lat1),
+      expression(lon2), expression(lat2)))
   def contains(g: Column, x: Column, y: Column): Column =
-    call_function("geo_contains", g, x, y)
+    column(GeoContains(expression(g), expression(x), expression(y)))
   def intersects(a: Column, b: Column): Column =
-    call_function("geo_intersects", a, b)
+    column(GeoIntersects(expression(a), expression(b)))
 }

@@ -7,8 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.ExpressionColumns.{column, expression}
 
 /** Native Catalyst expression for the d-dimensional Hilbert index
   * (Butz 1971; Skilling's transpose formulation, AIP Conf. Proc. 707,
@@ -28,7 +28,8 @@ import org.apache.spark.sql.functions.{call_function, lit}
   *
   * Children are the d coordinate expressions (longs; masked to `bits`
   * inside the walk) — `bits` is captured at construction from the
-  * trailing literal argument of the registered `hilbert_index` call.
+  * `bits` argument of [[HilbertFunctions.hilbertIndex]], or from the
+  * trailing literal of a SQL `hilbert_index` call.
   * Null in → null out. */
 case class HilbertIndex(children: Seq[Expression], bits: Int)
     extends Expression {
@@ -191,7 +192,7 @@ object HilbertIndexXY {
   }
 }
 
-/** Registration + column API, mirroring [[VectorFunctions]]. */
+/** SQL function info + column API, mirroring [[VectorFunctions]]. */
 object HilbertFunctions {
 
   val info: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
@@ -227,22 +228,12 @@ object HilbertFunctions {
       HilbertIndexXY(args(0), args(1), bits)
     })
 
-  /** Idempotently register `hilbert_index`/`hilbert_xy` on an existing
-    * session. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("hilbert_index", info._3, "scala_udf")
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("hilbert_xy", xyInfo._3, "scala_udf")
-  }
-
-  /** `hilbert_index(xs..., bits)` as a Column; caller must have run
-    * `register`. Coordinates are cast to long here. */
+  /** `hilbert_index(xs..., bits)` as a Column. Coordinates are cast to
+    * long here. */
   def hilbertIndex(xs: Seq[Column], bits: Int): Column =
-    call_function("hilbert_index", xs.map(_.cast("long")) :+ lit(bits): _*)
+    column(HilbertIndex(xs.map(x => expression(x.cast("long"))), bits))
 
-  /** `hilbert_xy(x, y, bits)` as a Column; caller must have run
-    * `register`. */
+  /** `hilbert_xy(x, y, bits)` as a Column. */
   def hilbertXY(x: Column, y: Column, bits: Int): Column =
-    call_function("hilbert_xy", x.cast("long"), y.cast("long"), lit(bits))
+    column(HilbertIndexXY(expression(x.cast("long")), expression(y.cast("long")), bits))
 }

@@ -6,8 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.ExpressionColumns.{column, expression}
 
 /** Native sorted-set intersection COUNT: `|a ∩ b|` for two ASC-sorted
   * long arrays, as one linear merge walk — the per-edge kernel of the
@@ -84,7 +84,7 @@ object SortedIntersectCount {
   }
 }
 
-/** Registration + column API, mirroring [[VectorFunctions]]. */
+/** SQL function info + column API, mirroring [[VectorFunctions]]. */
 object IntersectFunctions {
 
   val info: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
@@ -96,14 +96,7 @@ object IntersectFunctions {
       SortedIntersectCount(args(0), args(1))
     })
 
-  /** Idempotently register `sorted_intersect_count` on an existing
-    * session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("sorted_intersect_count", info._3, "scala_udf")
-
-  /** `sorted_intersect_count(a, b)` as a Column; caller must have run
-    * `register` (or built the session with GraftExtensions). */
+  /** `sorted_intersect_count(a, b)` as a Column. */
   def sortedIntersectCount(a: Column, b: Column): Column =
-    call_function("sorted_intersect_count", a, b)
+    column(SortedIntersectCount(expression(a), expression(b)))
 }

@@ -7,8 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Un
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructType}
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.ExpressionColumns.{column, expression}
 
 /** Native MinHash signature: all K affine-permutation minima of a
   * document's (ha, hb) shingle-hash pairs in ONE pass —
@@ -212,10 +212,10 @@ object MinhashSignatureText {
   }
 }
 
-/** Registration + column API, mirroring [[VectorFunctions]]. The
-  * permutation constants are captured in the closure the registered
-  * builder returns — callers register a NAMED VARIANT per constant set
-  * (graft uses one: the Dedup minhash family). */
+/** SQL function info + column API, mirroring [[VectorFunctions]]. The
+  * permutation constants live in the expression: a Column helper takes
+  * them as arguments, and the SQL names [[graft.plans.GraftExtensions]]
+  * injects are bound to the Dedup minhash family. */
 object MinhashFunctions {
 
   def info(a: Array[Long], b: Array[Long], c: Array[Long], mod: Long):
@@ -229,8 +229,8 @@ object MinhashFunctions {
     })
 
   /** Info triple for a fused text-input variant (`minhash_sig_text_md5`
-    * or `minhash_sig_text_xxh`), for registration or extension
-    * injection — one name per hash family. */
+    * or `minhash_sig_text_xxh`), for extension injection — one name per
+    * hash family. */
   def textInfo(name: String, a: Array[Long], b: Array[Long], c: Array[Long],
       mod: Long, replayable: Boolean):
       (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
@@ -242,60 +242,16 @@ object MinhashFunctions {
       MinhashSignatureText(args.head, a, b, c, mod, replayable)
     })
 
-  /** Per-session record of the constants each minhash function NAME was
-    * registered with. Names are session-global, and the constants live
-    * in the builder closures — a silent re-registration with a
-    * DIFFERENT family would redefine the function for every subsequent
-    * plan build and hand earlier callers wrong signatures with no
-    * error. Weak keys: a stopped session's entry must not pin the
-    * session. */
-  private val registered = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, (Seq[Long], Seq[Long], Seq[Long], Long)]]())
+  /** `minhash_sig(hp)` as a Column over the permutation family
+    * (a, b, c, mod). */
+  def minhashSig(hp: Column, a: Array[Long], b: Array[Long], c: Array[Long],
+      mod: Long): Column =
+    column(MinhashSignature(expression(hp), a, b, c, mod))
 
-  /** Guarded idempotent registration shared by all minhash variants:
-    * same (name, family) → no-op; different family under an existing
-    * name → loud failure (register a distinctly named variant for a
-    * second family instead of silently redefining this one). */
-  private def guardedRegister(spark: SparkSession, name: String,
-      a: Array[Long], b: Array[Long], c: Array[Long], mod: Long)(
-      builder: Seq[Expression] => Expression): Unit = {
-    val fam = (a.toSeq, b.toSeq, c.toSeq, mod)
-    val perSession = registered.synchronized {
-      var m = registered.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, (Seq[Long], Seq[Long], Seq[Long], Long)]()
-        registered.put(spark, m)
-      }
-      m
-    }
-    val prev = perSession.putIfAbsent(name, fam)
-    if (prev != null && prev != fam)
-      throw new IllegalStateException(
-        s"$name is already registered on this session with a different " +
-          "permutation family; use a distinctly named variant for a second family")
-    if (prev == null)
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "scala_udf")
-  }
-
-  /** Idempotently register `minhash_sig` bound to these constants. */
-  def register(spark: SparkSession, a: Array[Long], b: Array[Long],
-      c: Array[Long], mod: Long): Unit =
-    guardedRegister(spark, "minhash_sig", a, b, c, mod)(info(a, b, c, mod)._3)
-
-  /** Idempotently register BOTH text-input fused variants
-    * (`minhash_sig_text_md5` / `minhash_sig_text_xxh`) bound to these
-    * constants — one name per hash family, so the session can hold both
-    * and the conf seam picks at call time. */
-  def registerText(spark: SparkSession, a: Array[Long], b: Array[Long],
-      c: Array[Long], mod: Long): Unit = {
-    guardedRegister(spark, "minhash_sig_text_md5", a, b, c, mod)(
-      textInfo("minhash_sig_text_md5", a, b, c, mod, replayable = true)._3)
-    guardedRegister(spark, "minhash_sig_text_xxh", a, b, c, mod)(
-      textInfo("minhash_sig_text_xxh", a, b, c, mod, replayable = false)._3)
-  }
-
-  /** `minhash_sig(hp)` as a Column; caller must have run `register`. */
-  def minhashSig(hp: Column): Column = call_function("minhash_sig", hp)
+  /** The fused text-input signature as a Column over the permutation
+    * family (a, b, c, mod): md5 shingle halves when `replayable`, else
+    * seeded xxhash64 (`minhash_sig_text_md5` / `_xxh` in SQL). */
+  def minhashSigText(shingles: Column, a: Array[Long], b: Array[Long],
+      c: Array[Long], mod: Long, replayable: Boolean): Column =
+    column(MinhashSignatureText(expression(shingles), a, b, c, mod, replayable))
 }

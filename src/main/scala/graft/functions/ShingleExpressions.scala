@@ -6,8 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Un
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.ExpressionColumns.{column, expression}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native 3-gram shingling: token array → DISTINCT space-joined word
@@ -85,7 +85,7 @@ object Shingle3 {
   }
 }
 
-/** Registration + column API, mirroring [[HilbertFunctions]]. */
+/** SQL function info + column API, mirroring [[HilbertFunctions]]. */
 object ShingleFunctions {
 
   val info: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
@@ -97,11 +97,6 @@ object ShingleFunctions {
       Shingle3(args.head)
     })
 
-  /** Idempotently register `shingle3` on an existing session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("shingle3", info._3, "scala_udf")
-
-  /** `shingle3(ws)` as a Column; caller must have run `register`. */
-  def shingle3(ws: Column): Column = call_function("shingle3", ws)
+  /** `shingle3(ws)` as a Column. */
+  def shingle3(ws: Column): Column = column(Shingle3(expression(ws)))
 }

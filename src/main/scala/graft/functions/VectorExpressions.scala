@@ -6,8 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.ExpressionColumns.{column, expression}
 
 /** Native Catalyst expression for the dense-vector dot product
   * `sum_i(a[i] * b[i])`, accumulated left-to-right from 0.0 — the exact
@@ -84,7 +84,8 @@ case class DotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration + column API for graft's native expressions. */
+/** SQL function info (for [[graft.plans.GraftExtensions]]) + column API
+  * for graft's native expressions. */
 object VectorFunctions {
 
   val dotInfo: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
@@ -92,12 +93,7 @@ object VectorFunctions {
     new ExpressionInfo(classOf[DotProduct].getName, "vec_dot"),
     (args: Seq[Expression]) => DotProduct(args(0), args(1)))
 
-  /** Idempotently register `vec_dot` on an existing session (covers
-    * sessions not built with GraftExtensions). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("vec_dot", dotInfo._3, "scala_udf")
-
-  /** `vec_dot(a, b)` as a Column; caller must have run `register`. */
-  def vecDot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
+  /** `vec_dot(a, b)` as a Column. */
+  def vecDot(a: Column, b: Column): Column =
+    column(DotProduct(expression(a), expression(b)))
 }

@@ -736,7 +736,6 @@ object Advanced {
     * would widen to non-integer types). */
   def q129Triangles(spark: SparkSession, dir: String): DataFrame = {
     val (edges, deg, oriented) = trianglesGraph(spark, dir)
-    graft.functions.IntersectFunctions.register(spark)
     // Oriented out-adjacency, sorted: one |E|-row shuffle producing |V|
     // rows whose arrays the orientation bounds at O(√m) — the SAME
     // bound that caps the wedge fan-out, now capping an array length.

@@ -144,9 +144,7 @@ object Layout {
 
   /** 2-D Hilbert index, hot path: the native codegen'd `hilbert_xy`
     * walk — bit-identical to [[hilbertValueFold]] (spec-pinned), ~8×
-    * faster under the interpreter-free loop. Caller must have run
-    * `HilbertFunctions.register(spark)` — q160 and [[layoutHilbert]]
-    * do. */
+    * faster under the interpreter-free loop. */
   def hilbertValue(x: Column, y: Column, bits: Int = 16): Column =
     graft.functions.HilbertFunctions.hilbertXY(x, y, bits)
 
@@ -154,7 +152,6 @@ object Layout {
     * same one range-repartition, only the clustering key changes. */
   def layoutHilbert(df: DataFrame, x: Column, y: Column, n: Int,
       bits: Int = 16): DataFrame = {
-    graft.functions.HilbertFunctions.register(df.sparkSession)
     val top = (1L << bits) - 1
     val bounds = df.agg(min(x).cast("long").as("_xmin"), max(x).cast("long").as("_xmax"),
       min(y).cast("long").as("_ymin"), max(y).cast("long").as("_ymax"))
@@ -175,7 +172,6 @@ object Layout {
     * curve, same keys (customer × order-day), hash-checked against the
     * unrolled-CTE walk. */
   def q160HilbertOrder(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.HilbertFunctions.register(spark)
     val dayNum = datediff(col("o_orderdate"), lit("1990-01-01").cast("date"))
     orders(spark, dir)
       .select(col("o_orderkey"), col("o_custkey"),
@@ -234,8 +230,7 @@ object Layout {
     * so this one is a native codegen'd Expression instead, the
     * [[graft.functions.HilbertIndex]] tight-loop walk (the vec_dot
     * precedent; ~1 s for the identical q162, bit-identical output).
-    * Caller must have run `HilbertFunctions.register(spark)` —
-    * [[layoutHilbertD]] and q162 do. Requires d·bits <= 63. */
+    * Requires d·bits <= 63. */
   def hilbertValueD(xs: Seq[Column], bits: Int): Column = {
     require(xs.size >= 2 && xs.size * bits <= 63,
       s"hilbertValueD: d=${xs.size} bits=$bits out of range")
@@ -267,7 +262,6 @@ object Layout {
     * clustering columns. */
   def layoutHilbertD(df: DataFrame, keys: Seq[Column], n: Int,
       bits: Int = 12): DataFrame = {
-    graft.functions.HilbertFunctions.register(df.sparkSession)
     layoutD(df, keys, n, bits)(hilbertValueD(_, bits))
   }
 
@@ -286,7 +280,6 @@ object Layout {
     * × 3 per-dim steps unrolled as chained CTE stages, then the Gray /
     * twist / interleave algebra. */
   def q162Hilbert3d(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.HilbertFunctions.register(spark)
     val dayNum = datediff(col("o_orderdate"), lit("1990-01-01").cast("date"))
     val cents = round(col("o_totalprice") * 100).cast("long")
     orders(spark, dir)

@@ -455,7 +455,6 @@ object TimeSeries {
     * hand-derived like q37's. */
   def q203CaicSpatial(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.GeoFunctions.register(spark)
     val cell = 0.5
     val areas = graft.caic.CaicPipeline
       .areaFeatures(Seq(graft.caic.CaicFixtures.areasJson).toDF("value"))
@@ -507,7 +506,6 @@ object TimeSeries {
     * proves the refine actually refines. */
   def q204CaicContains(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.GeoFunctions.register(spark)
     val cell = 0.5
     val areas = graft.caic.CaicPipeline
       .areaFeatures(Seq(graft.caic.CaicFixtures.areasJson).toDF("value"))
@@ -566,7 +564,6 @@ object TimeSeries {
     * free at any scale, the q202 contract. */
   def q216CaicIntersects(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.GeoFunctions.register(spark)
     val cell = 0.5
     def rect(x1: Double, y1: Double, x2: Double, y2: Double): String =
       s"""{"type":"Polygon","coordinates":[[[$x1,$y1],[$x2,$y1],[$x2,$y2],[$x1,$y2],[$x1,$y1]]]}"""
@@ -843,7 +840,6 @@ object TimeSeries {
     * two engines' trig ulps (~1e-9 m at this magnitude) can never
     * flip a hash. */
   def q226GeoDistance(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(spark)
     val pts = customer(spark, dir).select(col("c_custkey"),
       (pmod(col("c_custkey") * 13L, lit(3600L)).cast("double") / 10.0 - 180.0).as("lon"),
       (pmod(col("c_custkey") * 41L, lit(1600L)).cast("double") / 10.0 - 80.0).as("lat"))

@@ -15,16 +15,15 @@ import org.apache.spark.sql.types.IntegerType
   * expression surface as SQL functions, so a pure-SQL deployment
   * (spark-sql / Thrift server / `spark.sql(...)` with the conf above)
   * can call `vec_dot`, `hilbert_index`, `hilbert_xy`, `shingle3`,
-  * `sorted_intersect_count` and the `minhash_sig*` family without any
-  * Scala-side `register()` call.
+  * `sorted_intersect_count`, `geo_envelope`, `geo_contains`,
+  * `geo_intersects`, `geo_distance` and the `minhash_sig*` family.
+  * This is the only name-based path: the Scala Column helpers
+  * (`graft.functions.*Functions`) build their expressions directly and
+  * need no session setup.
   * The minhash functions are bound to the PRODUCTION permutation family
   * (the one the dedup chain and the q31/q78 oracles use — deterministic,
-  * seed-fixed, see `Dedup.minhashFamily`); a second constant family
-  * still goes through `MinhashFunctions.guardedRegister` under a
-  * distinct name, exactly as before. Each `injectFunction` is
-  * per-session-build (the extension point re-applies for every new
-  * session), so unlike the temp-function path there is no cross-session
-  * registry to guard. */
+  * seed-fixed, see `Dedup.minhashFamily`); another constant family goes
+  * through the Column helpers, which take the constants as arguments. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => LevenshteinPrefilter)
@@ -49,6 +48,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(graft.functions.GeoFunctions.envelopeInfo)
     ext.injectFunction(graft.functions.GeoFunctions.containsInfo)
     ext.injectFunction(graft.functions.GeoFunctions.intersectsInfo)
+    ext.injectFunction(graft.functions.GeoFunctions.distanceInfo)
     val (a, b, c, mod) = graft.dedup.Dedup.minhashFamily
     ext.injectFunction(graft.functions.MinhashFunctions.info(a, b, c, mod))
     ext.injectFunction(graft.functions.MinhashFunctions.textInfo(

@@ -153,7 +153,6 @@ object AnnIndex {
     * every production IVF train step. */
   def fit(spark: SparkSession, cat: String, basePath: String,
       k: Int): Seq[Seq[Double]] = {
-    graft.functions.VectorFunctions.register(spark)
     val sample: Array[Array[Double]] = withParsed(
       spark.sql(s"SELECT vec_id, vec FROM $cat.`$basePath`"), needUnit = false)
       .orderBy(md5(concat(col("vec_id").cast("string"), lit("|graft-ann-fit-1"))).asc,
@@ -218,7 +217,6 @@ object AnnIndex {
   def create(spark: SparkSession, cat: String, indexRoot: String,
       basePath: String, centroids: Seq[Seq[Double]],
       pq: Option[Seq[Seq[Seq[Double]]]] = None): Unit = {
-    graft.functions.VectorFunctions.register(spark)
     new java.io.File(indexRoot).mkdirs()
     val postings = postingsPath(indexRoot)
     val head = JsonDocVersions.latestVersion(basePath).getOrElse(0)
@@ -283,7 +281,6 @@ object AnnIndex {
     * the postings manifest's transaction ledger ([[GraftTxn]]). */
   def refresh(spark: SparkSession, cat: String, indexRoot: String): (Int, Int) =
     synchronized {
-      graft.functions.VectorFunctions.register(spark)
       val d = readDef(indexRoot)
       val postings = postingsPath(indexRoot)
       val last = math.max(d.lastVersion,
@@ -335,7 +332,6 @@ object AnnIndex {
     * only, top-`k`. */
   def searchPq(spark: SparkSession, cat: String, indexRoot: String,
       queryVecId: Long, shortlist: Int, k: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val d = readDef(indexRoot)
     val books = d.pq.getOrElse(throw new IllegalStateException(
       s"ann index $indexRoot carries no PQ codebooks — create(pq = Some(...))"))
@@ -400,7 +396,6 @@ object AnnIndex {
 
   private def searchVec0(spark: SparkSession, cat: String, indexRoot: String,
       qv: Seq[Double], nProbe: Int, k: Int, exclude: Option[Long]): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val d = readDef(indexRoot)
     require(qv.nonEmpty && d.centroids.head.length == qv.length,
       s"ann index: the query vector has ${qv.length} dims, the index " +

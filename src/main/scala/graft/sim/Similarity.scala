@@ -22,7 +22,6 @@ object Similarity {
     * left-to-right from 0.0, the same op order as
     * `aggregate(v, 0.0, (a,x) => a + x*x)`. */
   def vectors(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("norm", sqrt(dot(col("v"), col("v"))))
@@ -31,8 +30,7 @@ object Similarity {
   /** Native codegen'd dot product (graft.functions.DotProduct) —
     * bit-identical to `aggregate(zip_with(a,b,_*_), 0.0, _+_)` but with no
     * per-pair array allocation, which is what makes the O(n²) all-pairs
-    * query (q34) feasible. Requires VectorFunctions.register (done in
-    * `vectors`). */
+    * query (q34) feasible. */
   def dot(a: Column, b: Column): Column =
     graft.functions.VectorFunctions.vecDot(a, b)
 
@@ -932,7 +930,6 @@ object Similarity {
     // one scan carrying the label along — joining a second embeddings
     // read back by vec_id would shuffle the corpus for a column the
     // scan already has
-    graft.functions.VectorFunctions.register(spark)
     val vs = graft.Caches.register(embeddings(spark, dir)
       .select(col("vec_id"), col("label"), col("embedding").cast("array<double>").as("v"))
       .withColumn("norm", sqrt(dot(col("v"), col("v"))))
@@ -983,7 +980,6 @@ object Similarity {
     * ROUNDED cosines with a label tiebreak (the q126 policy), so the
     * DuckDB oracle replays it exactly. */
   def q144LabelCentroids(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val vs = graft.Caches.register(embeddings(spark, dir)
       .select(col("vec_id"), col("label"), col("embedding").cast("array<double>").as("v"))
       .cache())

@@ -96,6 +96,32 @@ class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "SELECT sorted_intersect_count(array(1L,3L,5L,7L), array(3L,4L,5L)) AS n")
       .head.getLong(0)
     assert(ic == 2L)
+    // all 12 injected names in one statement: each resolves and evaluates
+    val sq = "'{\"type\":\"Polygon\",\"coordinates\":[[[0,0],[2,0],[2,2],[0,2],[0,0]]]}'"
+    val all = spark.sql(
+      s"""SELECT vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS v,
+                 hilbert_index(CAST(3 AS BIGINT), CAST(5 AS BIGINT), 4) AS hi,
+                 hilbert_xy(CAST(3 AS BIGINT), CAST(5 AS BIGINT), 4) AS hx,
+                 shingle3(array('a', 'b', 'c')) AS s3,
+                 sorted_intersect_count(array(1L, 2L), array(2L, 3L)) AS ic,
+                 geo_envelope($sq).xmax AS ex,
+                 geo_contains($sq, 1.0D, 1.0D) AS gc,
+                 geo_intersects($sq, '{"type":"Point","coordinates":[1,1]}') AS gi,
+                 geo_distance(0.0D, 0.0D, 0.0D, 0.0D) AS gd,
+                 minhash_sig(array(named_struct('ha', 1L, 'hb', 2L))) AS ms,
+                 minhash_sig_text_md5(array('a b c')) AS m5,
+                 minhash_sig_text_xxh(array('a b c')) AS mx""").head
+    assert(all.getDouble(0) == 11.0)
+    assert(all.getLong(1) == all.getLong(2), "hilbert_index at d=2 must equal hilbert_xy")
+    assert(all.getSeq[String](3) == Seq("a b c"))
+    assert(all.getLong(4) == 1L)
+    assert(all.getDouble(5) == 2.0)
+    assert(all.getBoolean(6) && all.getBoolean(7))
+    assert(all.getDouble(8) == 0.0)
+    for (i <- 9 to 11) {
+      val sig = all.getSeq[Any](i)
+      assert(sig.size == 64 && sig.forall(_ != null), s"column $i: $sig")
+    }
   }
 
   test("injected SQL surface: hilbert_index at d=2 equals hilbert_xy, both from SQL") {

@@ -23,7 +23,6 @@ class GeoEnvelopeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def env(json: String): Option[(Double, Double, Double, Double)] = {
     import spark.implicits._
-    graft.functions.GeoFunctions.register(spark)
     val r = Seq(json).toDF("g")
       .select(graft.functions.GeoFunctions.envelope(org.apache.spark.sql.functions.col("g")).as("e"))
       .selectExpr("e.xmin", "e.ymin", "e.xmax", "e.ymax")
@@ -59,7 +58,6 @@ class GeoEnvelopeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(env("""{"type":"Polygon","coordinates":[]}""") === None, "empty coordinates")
     assert(env("""{"type":"GeometryCollection","geometries":[]}""") === None)
     import spark.implicits._
-    graft.functions.GeoFunctions.register(spark)
     val r = Seq(Option.empty[String]).toDF("g")
       .select(graft.functions.GeoFunctions.envelope(org.apache.spark.sql.functions.col("g")))
       .collect()(0)
@@ -68,7 +66,6 @@ class GeoEnvelopeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def contains(json: String, x: Double, y: Double): Option[Boolean] = {
     import spark.implicits._
-    graft.functions.GeoFunctions.register(spark)
     val c = org.apache.spark.sql.functions
     val r = Seq((json, x, y)).toDF("g", "x", "y")
       .select(graft.functions.GeoFunctions.contains(c.col("g"), c.col("x"), c.col("y")))
@@ -104,7 +101,6 @@ class GeoEnvelopeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("the expression runs inside whole-stage codegen over the CAIC fixture areas") {
     import spark.implicits._
-    graft.functions.GeoFunctions.register(spark)
     val areas = graft.caic.CaicPipeline
       .areaFeatures(Seq(graft.caic.CaicFixtures.areasJson).toDF("value"))
       .select(org.apache.spark.sql.functions.col("id"),

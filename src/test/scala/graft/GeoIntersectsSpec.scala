@@ -19,13 +19,13 @@ class GeoIntersectsSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .appName("geo-intersects-spec")
+    .withExtensions(new graft.plans.GraftExtensions)
     .getOrCreate()
 
   override def afterAll(): Unit = spark.stop()
 
   private def ix(a: String, b: String): Option[Boolean] = {
     import spark.implicits._
-    graft.functions.GeoFunctions.register(spark)
     val r = Seq((a, b)).toDF("a", "b")
       .select(graft.functions.GeoFunctions.intersects(
         org.apache.spark.sql.functions.col("a"),
@@ -110,7 +110,6 @@ class GeoIntersectsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ix(tri, """{"type":"Polygon"}""") === Some(false),
       "a geometry with no positions intersects nothing")
     import spark.implicits._
-    graft.functions.GeoFunctions.register(spark)
     val r = Seq((Option.empty[String], tri)).toDF("a", "b")
       .selectExpr("geo_intersects(a, b) AS i").collect()(0)
     assert(r.isNullAt(0), "SQL null in, SQL null out")
@@ -123,7 +122,6 @@ class GeoIntersectsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // coordinates keep the oracle ulp-free. Seeded: failures reproduce.
     val rnd = new scala.util.Random(20260816L)
     import spark.implicits._
-    graft.functions.GeoFunctions.register(spark)
     val cases = (0 until 300).map { _ =>
       def r() = { // small domain so touching/overlap/disjoint all occur
         val x1 = rnd.nextInt(12); val y1 = rnd.nextInt(12)
@@ -144,7 +142,6 @@ class GeoIntersectsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("whole-stage codegen path agrees with interpreted eval") {
     import spark.implicits._
-    graft.functions.GeoFunctions.register(spark)
     val pairs = Seq(
       (tri, rect(1, -1, 3, 0.5), true), // crosses the bottom edge
       (tri, rect(0.2, 2.5, 1.0, 3.5), false),

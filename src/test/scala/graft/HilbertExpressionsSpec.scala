@@ -17,12 +17,12 @@ class HilbertExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    .withExtensions(new graft.plans.GraftExtensions)
     .getOrCreate()
 
   override def afterAll(): Unit = spark.stop()
 
   test("hilbert_index matches the driver-side walk on random 3-D points; negative inputs mask like the oracle") {
-    graft.functions.HilbertFunctions.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(11)
     val pts = Seq.fill(300)((rnd.nextLong(), rnd.nextLong(), rnd.nextLong()))
@@ -50,7 +50,6 @@ class HilbertExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("malformed calls fail analysis with a message, not garbage or a raw index error") {
-    graft.functions.HilbertFunctions.register(spark)
     // bits=0 must be an analysis failure: walk()'s 1L << (bits-1) would
     // otherwise hit a negative shift and silently return a wrong index
     val e0 = intercept[Exception] {
@@ -76,7 +75,6 @@ class HilbertExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("hilbert_index and hilbert_xy: null in, null out") {
-    graft.functions.HilbertFunctions.register(spark)
     import spark.implicits._
     val df = Seq((Some(1L), None: Option[Long])).toDF("x", "y")
     val out = df.select(
@@ -87,7 +85,6 @@ class HilbertExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("both hilbert expressions participate in whole-stage codegen") {
-    graft.functions.HilbertFunctions.register(spark)
     val df = spark.range(8)
       .select(graft.functions.HilbertFunctions.hilbertIndex(
         Seq(col("id"), col("id") + 1, col("id") + 2), bits = 8).as("h"),

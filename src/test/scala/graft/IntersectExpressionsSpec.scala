@@ -16,6 +16,7 @@ class IntersectExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    .withExtensions(new graft.plans.GraftExtensions)
     .getOrCreate()
 
   override def afterAll(): Unit = spark.stop()
@@ -24,7 +25,6 @@ class IntersectExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     graft.functions.IntersectFunctions.sortedIntersectCount(a, b)
 
   test("sorted_intersect_count equals size(array_intersect) on random sorted sets") {
-    graft.functions.IntersectFunctions.register(spark)
     val rnd = new scala.util.Random(41)
     // random sorted duplicate-free long arrays, including empties and
     // heavy overlaps (drawn from a small universe)
@@ -43,7 +43,6 @@ class IntersectExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("sorted_intersect_count: null input yields null; empty yields 0") {
-    graft.functions.IntersectFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (Some(Seq(1L, 2L)), None),
@@ -55,7 +54,6 @@ class IntersectExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("sorted_intersect_count participates in whole-stage codegen") {
-    graft.functions.IntersectFunctions.register(spark)
     val df = spark.range(4)
       .select(array(col("id"), col("id") + 2L).as("a"),
         array(lit(2L), lit(3L)).as("b"))
@@ -70,7 +68,6 @@ class IntersectExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("malformed arity from SQL is rejected by name") {
-    graft.functions.IntersectFunctions.register(spark)
     val e = intercept[Exception] {
       spark.sql("SELECT sorted_intersect_count(array(1L), array(2L), 3)").collect()
     }

@@ -252,7 +252,6 @@ class LayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("hilbertValue: bijective, UNIT-STEP continuous (the property Morton lacks), and better neighbor locality") {
     import ops.Layout
     import spark.implicits._
-    functions.HilbertFunctions.register(spark)
     // the native hot path and the declarative fold are the SAME curve:
     // bit-identical on the exhaustive grid (so the q160 oracle replaying
     // the fold's algebra pins the native walk too)
@@ -316,7 +315,6 @@ class LayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("hilbertValueD: bijective and unit-step in 3-D and 4-D (exhaustive grids)") {
     import ops.Layout
     import spark.implicits._
-    functions.HilbertFunctions.register(spark)
     // d=3, bits=3: all 512 cells — bijection onto 0..511 and every
     // consecutive index pair at Manhattan distance EXACTLY 1 (the
     // defining Hilbert property; any bug in the transpose walk's

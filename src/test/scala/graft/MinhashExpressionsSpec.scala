@@ -22,8 +22,8 @@ class MinhashExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("native minhash_sig equals the HOF reference on the real corpus, incl. degenerate docs") {
     val sh = dedup.Dedup.shingles(spark, "/root/testdata/sf0.001")
-    // minhashSignaturesOf registers the function and computes the native
-    // sig; recompute the reference from the same hp projection
+    // minhashSignaturesOf computes the native sig; recompute the
+    // reference from the same hp projection
     val native = dedup.Dedup.minhashSignaturesOf(sh)
       .select(col("doc_id"), col("sig"))
     val hp = transform(col("shingles"), s => struct(
@@ -43,20 +43,20 @@ class MinhashExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("fused text signature equals the struct route for BOTH hash families (the full ladder)") {
     // ladder: fused-text native (r12) ≡ struct-input native (r11) ≡ the
-    // K-lambda HOF reference (pinned in the first test). Both named
-    // variants are registered; the md5 leg is additionally covered
-    // corpus-wide by the first test (minhashSignaturesOf now IS the
-    // fused text path), so this pins the xxh leg and the md5 leg on the
-    // same frame, value for value.
+    // K-lambda HOF reference (pinned in the first test). The md5 leg is
+    // additionally covered corpus-wide by the first test
+    // (minhashSignaturesOf now IS the fused text path), so this pins the
+    // xxh leg and the md5 leg on the same frame, value for value.
     val sh = dedup.Dedup.shingles(spark, "/root/testdata/sf0.001")
-    dedup.Dedup.minhashSignaturesOf(sh) // registers the text variants
+    val (a, b, c, mod) = dedup.Dedup.minhashFamily
     for (replayable <- Seq(true, false)) {
       val hp = transform(col("shingles"),
         s => dedup.Dedup.minhashHpReference(replayable)(s))
       val structRoute = dedup.Dedup
         .minhashSignaturesStructRouteForSpec(sh.withColumn("hp", hp))
       val fn = if (replayable) "minhash_sig_text_md5" else "minhash_sig_text_xxh"
-      val diff = sh.select(col("doc_id"), call_function(fn, col("shingles")).as("sig"))
+      val diff = sh.select(col("doc_id"), functions.MinhashFunctions
+          .minhashSigText(col("shingles"), a, b, c, mod, replayable).as("sig"))
         .join(structRoute.select(col("doc_id"), col("sig").as("ref_sig")), "doc_id")
         .where(!(col("sig") <=> col("ref_sig"))).count()
       assert(diff == 0, s"family=$fn: fused text diverges from the struct route on $diff docs")
@@ -79,22 +79,36 @@ class MinhashExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "a real shingle array must yield a fully non-null signature")
   }
 
-  test("re-registering minhash_sig with a different constant family fails loudly") {
+  test("two permutation families in one plan each give their own signatures") {
+    // the constants live in each expression, not behind a session-global
+    // function name: a second family beside the production one in the
+    // SAME projection must follow its own constants and leave the
+    // production signatures untouched
     val k = 4
     val a = Array.tabulate(k)(i => 3L + i)
     val b = Array.tabulate(k)(i => 5L + i)
     val c = Array.tabulate(k)(i => 7L + i)
-    // a fresh session: the corpus tests above already bound the Dedup
-    // family on `spark`, and this test must not disturb it
-    val s2 = spark.newSession()
-    functions.MinhashFunctions.register(s2, a, b, c, 97L)
-    // same family again: idempotent no-op
-    functions.MinhashFunctions.register(s2, a.clone(), b.clone(), c.clone(), 97L)
-    // different family under the same name: must throw, not redefine
-    val e = intercept[IllegalStateException] {
-      functions.MinhashFunctions.register(s2, a.map(_ + 1), b, c, 97L)
-    }
-    assert(e.getMessage.contains("different"))
+    val mod = 97L
+    val (pa, pb, pc, pmodulus) = dedup.Dedup.minhashFamily
+    val hp = transform(col("shingles"), s => dedup.Dedup.minhashHpReference(true)(s))
+    val ownRef = array((0 until k).map { i =>
+      array_min(transform(col("hp"),
+        p => pmod(p.getField("ha") * a(i) + p.getField("hb") * b(i) + c(i), lit(mod))))
+    }: _*)
+    val both = dedup.Dedup.shingles(spark, "/root/testdata/sf0.001")
+      .withColumn("hp", hp)
+      .select(
+        functions.MinhashFunctions.minhashSig(col("hp"), pa, pb, pc, pmodulus).as("prod"),
+        functions.MinhashFunctions.minhashSig(col("hp"), a, b, c, mod).as("second"),
+        dedup.Dedup.minhashSigHofReference.as("prod_ref"),
+        ownRef.as("second_ref"))
+    assert(both.count() > 0)
+    val bad = both.where(!(col("prod") <=> col("prod_ref")) ||
+      !(col("second") <=> col("second_ref"))).count()
+    assert(bad == 0, s"$bad docs: a family diverges from its own HOF reference")
+    val sizes = both.select(size(col("prod")), size(col("second"))).distinct().collect()
+      .map(r => (r.getInt(0), r.getInt(1))).toSeq
+    assert(sizes == Seq((64, k)), s"signature widths $sizes")
   }
 
   test("minhash_sig participates in whole-stage codegen") {

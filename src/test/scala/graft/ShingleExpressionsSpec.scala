@@ -25,7 +25,6 @@ class ShingleExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ws = docs.select(col("doc_id"),
       regexp_extract_all(lower(col("text")), lit("[a-z0-9]+"), lit(0)).as("ws"))
       .where(size(col("ws")) >= 3)
-    graft.functions.ShingleFunctions.register(spark)
     val diff = ws.select(col("doc_id"),
         graft.functions.ShingleFunctions.shingle3(col("ws")).as("a"),
         dedup.Dedup.shinglesHofReference.as("b"))
@@ -35,7 +34,6 @@ class ShingleExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("shingle3 edge cases: repeats keep first occurrence, short arrays empty, null tokens mirror concat") {
     import spark.implicits._
-    graft.functions.ShingleFunctions.register(spark)
     val rows = Seq(
       (1L, Seq("a", "b", "c", "a", "b", "c", "a")),    // wraps: dup grams
       (2L, Seq("x", "x", "x", "x")),                   // one distinct gram
@@ -67,7 +65,6 @@ class ShingleExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("shingle3 participates in whole-stage codegen") {
-    graft.functions.ShingleFunctions.register(spark)
     val df = Tables.documents(spark, "/root/testdata/sf0.001").limit(10)
       .select(regexp_extract_all(lower(col("text")), lit("[a-z0-9]+"), lit(0)).as("ws"))
       .select(graft.functions.ShingleFunctions.shingle3(col("ws")).as("s"))

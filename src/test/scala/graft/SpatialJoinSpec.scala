@@ -17,6 +17,7 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .appName("spatial-spec")
+    .withExtensions(new graft.plans.GraftExtensions)
     .getOrCreate()
 
   override def afterAll(): Unit = spark.stop()
@@ -167,7 +168,6 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("r17: geo_distance — known values, symmetry, zero, and SQL registration") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    graft.functions.GeoFunctions.register(spark)
     // Boulder -> Denver is ~38.6 km (public geodesic calculators;
     // spherical model lands within 0.5%)
     val d = spark.sql(

@@ -21,7 +21,6 @@ class VectorExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   test("vec_dot is bit-identical to aggregate(zip_with) on random vectors") {
-    graft.functions.VectorFunctions.register(spark)
     val rnd = new scala.util.Random(7)
     val rows = Seq.fill(200)((
       Seq.fill(64)(rnd.nextGaussian()),
@@ -39,7 +38,6 @@ class VectorExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("vec_dot: length mismatch and null input yield null") {
-    graft.functions.VectorFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (Some(Seq(1.0, 2.0)), Some(Seq(1.0, 2.0, 3.0))),
@@ -49,7 +47,6 @@ class VectorExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("vec_dot participates in whole-stage codegen") {
-    graft.functions.VectorFunctions.register(spark)
     // spark.range (not a local Seq) so ConvertToLocalRelation can't fold
     // the projection away before the physical plan is built.
     val df = spark.range(4)
