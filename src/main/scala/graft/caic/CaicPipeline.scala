@@ -1,9 +1,13 @@
 package graft.caic
 
 import java.util.{Collections, WeakHashMap}
-import org.apache.spark.sql.{Column, DataFrame, DataFrameFactory, SparkSession}
+import scala.annotation.tailrec
+import org.apache.spark.sql.{classic, Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression,
+  InterpretedMutableProjection, MutableProjection}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -30,13 +34,13 @@ import CaicModel._
   * the filters are `filter`, the styling is `transform`, and the Multi
   * explode is `flatten` over each feature's parts. `run` is `inline` of
   * that column; `document` folds it further into the submitted JSON text
-  * (`array_join` of one string per feature). With no generator left, the
-  * optimizer's `ConvertToLocalRelation` evaluates `document`'s projection
-  * on the driver, so an invocation launches zero Spark jobs and its
-  * executed plan is a bare `LocalTableScanExec`. The plan is analyzed once
-  * per session and conf (`prepared`); each invocation only swaps the input
-  * row. CaicPipelineSpec pins the job count, the plan and the re-plan on a
-  * conf change.
+  * (`array_join` of one string per feature). `document` runs no query: its
+  * plan is optimized once per session and conf (`prepared`) and its
+  * projections are bound over the two input strings, so an invocation
+  * plans nothing, runs no optimizer and launches zero Spark jobs; each
+  * call only evaluates one input row, interpreted. CaicPipelineSpec pins
+  * the zero queries and jobs and the re-plan on a conf change;
+  * CaicPropertySpec pins concurrent calls and per-session entries.
   */
 object CaicPipeline {
 
@@ -69,20 +73,18 @@ object CaicPipeline {
       .select(col("f.id").as("id"), col("f.properties").as("properties"),
         col("f.geometry").as("geometry"))
 
-  /** One invocation's documents (task.ts:95,107) parsed in one row:
-    * `areas`, the area feature array, and `products`, the product array.
+  /** Each row's `areas` and `products` documents (task.ts:95,107) parsed
+    * in place: `areas` becomes the area feature array, and `products` the
+    * product array.
     * PERMISSIVE mode reproduces the reference's union schema
     * (task.ts:45-52): records that aren't forecasts keep `type` and
     * null-pad the rest, surviving until the type filter. The parse is its
     * own select: the lookup lambda reads `areas` once per product, and a
     * `from_json` inlined there would re-parse the document each time. */
-  private def parsed(spark: SparkSession, areasJson: String, productsJson: String): DataFrame = {
-    import spark.implicits._
-    Seq((areasJson, productsJson)).toDF("areas", "products")
-      .select(
-        from_json(col("areas"), featureCollectionType, jsonOpts)("features").as("areas"),
-        from_json(col("products"), ArrayType(productType), jsonOpts).as("products"))
-  }
+  private def parsed(documents: DataFrame): DataFrame =
+    documents.select(
+      from_json(col("areas"), featureCollectionType, jsonOpts)("features").as("areas"),
+      from_json(col("products"), ArrayType(productType), jsonOpts).as("products"))
 
   private val jsonOpts = Map("mode" -> "PERMISSIVE")
 
@@ -208,9 +210,11 @@ object CaicPipeline {
     features.select(inline(explodeFeature(featureRow)))
 
   /** Full pipeline: raw JSON documents → output features, one row each. */
-  def run(spark: SparkSession, areasJson: String, productsJson: String): DataFrame =
-    parsed(spark, areasJson, productsJson)
+  def run(spark: SparkSession, areasJson: String, productsJson: String): DataFrame = {
+    import spark.implicits._
+    parsed(Seq((areasJson, productsJson)).toDF("areas", "products"))
       .select(inline(features(col("areas"), col("products"))))
+  }
 
   // --------------------------------------------------------------- document
 
@@ -237,13 +241,23 @@ object CaicPipeline {
     features.select(featureJson(featureRow)).collect()
       .map(_.getString(0)).mkString(documentHead, ",", documentTail)
 
-  /** Analyzed plan of one invocation's document, prepared per session and
-    * conf snapshot: a conf change (ANSI, time zone, ...) changes how the
-    * expressions resolve, so it prepares a new plan. */
-  private final case class Prepared(conf: Map[String, String], plan: LogicalPlan)
+  /** One invocation's document as interpreted projections over its
+    * optimized plan, prepared per session and conf snapshot: a conf change
+    * (ANSI, time zone, ...) changes how the expressions resolve, so it
+    * prepares a new one. `steps` are the plan's projections from the
+    * input up: the first maps the two input strings to the parsed
+    * `areas`/`products` row, and the last gives the document, so the
+    * lookup lambda reads the parsed areas instead of parsing them again.
+    * The projections and their lambda variables hold per-row state, so
+    * calls evaluate under the entry's lock. */
+  private final class Prepared(val conf: Map[String, String], val sqlConf: SQLConf,
+      val steps: Seq[MutableProjection], val expressions: Seq[Expression])
   private val prepared = Collections.synchronizedMap(new WeakHashMap[SparkSession, Prepared]())
 
-  private def prepare(spark: SparkSession): LogicalPlan = {
+  private val documentsSchema =
+    StructType(Seq(StructField("areas", StringType), StructField("products", StringType)))
+
+  private def prepare(spark: SparkSession): Prepared = {
     val conf = spark.conf.getAll
     Option(prepared.get(spark)).filter(_.conf == conf).getOrElse {
       val fs = features(col("areas"), col("products"))
@@ -251,18 +265,47 @@ object CaicPipeline {
       // `run`'s zero rows, that is an empty feature list
       val doc = concat(lit(documentHead),
         coalesce(array_join(transform(fs, f => featureJson(f)), ","), lit("")), lit(documentTail))
-      val p = Prepared(conf, parsed(spark, "", "").select(doc).queryExecution.analyzed)
+      // The input is an RDD the optimizer cannot see into, so it optimizes
+      // the projections without folding them into a local relation, and
+      // no job runs: the plan is never executed.
+      val input = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], documentsSchema)
+      @tailrec def projects(plan: LogicalPlan, above: List[Project]): List[Project] = plan match {
+        case p: Project => projects(p.child, p :: above)
+        case leaf =>
+          require(leaf.children.isEmpty, s"unexpected operator in the document plan:\n$plan")
+          above
+      }
+      val steps = projects(parsed(input).select(doc).queryExecution.optimizedPlan, Nil)
+      val bound = steps.map(p => BindReferences.bindReferences(p.projectList, p.child.output))
+      val sqlConf = spark.asInstanceOf[classic.SparkSession].sessionState.conf
+      val p = SQLConf.withExistingConf(sqlConf) {
+        new Prepared(conf, sqlConf, bound.map { exprs =>
+          val projection = InterpretedMutableProjection.createProjection(exprs)
+          projection.initialize(0)
+          projection
+        }, bound.flatten)
+      }
       prepared.put(spark, p)
       p
-    }.plan
+    }
   }
 
-  /** One invocation's submitted document (task.ts:189): the prepared plan
-    * with this document pair as its input row. The optimizer folds the
-    * whole projection on the driver, so `collect` launches no job. */
+  /** The bound expressions `document` evaluates in `spark` under its
+    * current conf. */
+  private[graft] def preparedExpressions(spark: SparkSession): Seq[Expression] =
+    prepare(spark).expressions
+
+  /** One invocation's submitted document (task.ts:189): the prepared
+    * projections evaluated on this document pair, on the calling thread.
+    * No query is planned and no Spark job runs, so query listeners do not
+    * see the call. */
   def document(spark: SparkSession, areasJson: String, productsJson: String): String = {
+    val p = prepare(spark)
     val row = InternalRow(UTF8String.fromString(areasJson), UTF8String.fromString(productsJson))
-    val plan = prepare(spark).transform { case r: LocalRelation => r.copy(data = Seq(row)) }
-    DataFrameFactory.ofAnalyzed(spark, plan).collect().head.getString(0)
+    p.synchronized {
+      SQLConf.withExistingConf(p.sqlConf) {
+        p.steps.foldLeft(row)((in, step) => step(in)).getUTF8String(0).toString
+      }
+    }
   }
 }

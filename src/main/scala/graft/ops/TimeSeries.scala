@@ -745,6 +745,8 @@ object TimeSeries {
     graft.Caches.registerCheckpoint(pending)
     var carried: DataFrame = null // (p_id, q_id, dist2) top-k so far, pending only
     var out: DataFrame = null
+    var folded: DataFrame = null // the last checkpoint of `out`
+    var unfolded = List.empty[DataFrame] // topk stores the lazy `out` still reads
     var ring = 0
     while (ring <= maxRing && !pending.isEmpty) {
       val ringCand = pending
@@ -763,9 +765,10 @@ object TimeSeries {
       // every eager checkpoint in this loop registers for the harness's
       // per-query drain (r19): Dataset.unpersist cannot reach RDD-level
       // checkpoint stores, and this loop's rings would otherwise pile up
-      // until driver GC. topk stores CANNOT retire per-ring — the lazy
-      // `out` union references every ring's topk until its own fold.
+      // until driver GC. A topk store is read by the lazy `out` union
+      // until the next fold, which retires it.
       graft.Caches.registerCheckpoint(topk)
+      unfolded ::= topk
       val bound = ring.toLong * w
       val done = topk.groupBy("p_id")
         .agg(count(lit(1)).as("nc"), max(col("dist2")).as("md"))
@@ -780,6 +783,11 @@ object TimeSeries {
       if (ring % 8 == 7) {
         out = out.localCheckpoint()
         graft.Caches.registerCheckpoint(out)
+        // the fold has read the previous fold and every ring's topk since;
+        // only this ring's topk is still read, by `carried`
+        (Option(folded) ++ unfolded.tail).foreach(graft.dedup.Dedup.retireCheckpoint)
+        folded = out
+        unfolded = List(topk)
       }
       val prevPending = pending
       pending = pending.join(done, Seq("p_id"), "left_anti").localCheckpoint()

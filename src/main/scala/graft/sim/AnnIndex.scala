@@ -130,16 +130,20 @@ object AnnIndex {
 
   /** Comma-joined PQ codes over the staged `__u` column — the q137
     * encode (per-subspace argmin via struct-min ranking, ties toward
-    * the smaller code). */
+    * the smaller code). Each subspace ranks its codebook with one
+    * `transform` over a literal array of `(|c|², c)`, with `|c|²`
+    * summed on the driver exactly as q137 sums it: the same doubles as
+    * one unrolled struct per code, in a projection small enough for
+    * whole-stage codegen to compile (8 × 16 unrolled `vec_dot` structs
+    * grew its method past the JVM's 64 KB limit). */
   private def codeOf(books: Seq[Seq[Seq[Double]]]): org.apache.spark.sql.Column = {
     val subDim = books.head.head.length
     val codes = books.zipWithIndex.map { case (book, s) =>
       val us = slice(col("__u"), s * subDim + 1, subDim)
-      array_min(array(book.zipWithIndex.map { case (c, j) =>
-        val c2 = c.map(x => x * x).sum
-        struct((lit(c2) - lit(2.0) * graft.functions.VectorFunctions
-          .vecDot(us, typedLit(c))).as("d"), lit(j).as("c"))
-      }: _*)).getField("c").cast("string")
+      val ranked = typedLit(book.map(c => (c.map(x => x * x).sum, c)))
+      array_min(transform(ranked, (c, j) =>
+        struct((c("_1") - lit(2.0) * graft.functions.VectorFunctions
+          .vecDot(us, c("_2"))).as("d"), j.as("c")))).getField("c").cast("string")
     }
     concat_ws(",", codes: _*)
   }

@@ -59,6 +59,56 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"stored-code ADC must reproduce q137 exactly\n got=$got\n ref=$ref")
   }
 
+  test("the persisted PQ encode compiles and gives the q137 codes at create and refresh") {
+    spark.conf.set("spark.sql.catalog.graftcat",
+      classOf[graft.sources.GraftCatalog].getName)
+    val root = java.nio.file.Files.createTempDirectory("graft_ann_pq_codegen").toString
+    val cat = "graftcat"
+    val base = s"$root/base"
+    spark.sql(s"CREATE TABLE $cat.`$base` (vec_id BIGINT, vec STRING) " +
+      "USING `graft-jsondoc` TBLPROPERTIES ('write.rowlevel.mode' = 'merge-on-read')")
+    val full = sim.Similarity.vectors(spark, dir).select(col("vec_id"),
+      concat_ws(",", transform(col("v"), x => x.cast("string"))).as("vec"))
+    full.filter(col("vec_id") < 3000).writeTo(s"$cat.`$base`").append() // v1
+    val rnd = new scala.util.Random(7L)
+    val books = Seq.fill(8, 16, 8)(rnd.nextDouble() * 0.6 - 0.3)
+    val cents = Seq.tabulate(8)(i => Seq.tabulate(64)(j => if (j % 8 == i) 1.0 else 0.0))
+    // the q137 encode replayed on the driver with the same IEEE op order:
+    // unit-normalize, then per subspace argmin of |c|² - 2·u·c, ties
+    // toward the smaller code
+    def dot(a: Seq[Double], b: Seq[Double]) = a.zip(b).foldLeft(0.0) { case (t, (x, y)) => t + x * y }
+    def code(vec: String): String = {
+      val v = vec.split(",").map(_.toDouble).toSeq
+      val n = math.sqrt(dot(v, v))
+      val u = v.map(_ / n)
+      books.zipWithIndex.map { case (book, s) =>
+        val us = u.slice(s * 8, s * 8 + 8)
+        book.map(c => c.map(x => x * x).sum - 2.0 * dot(us, c)).zipWithIndex
+          .reduceLeft((a, b) => if (b._1 < a._1) b else a)._2
+      }.mkString(",")
+    }
+    def checkCodes(stage: String, below: Long): Unit = {
+      val rows = spark.sql(s"SELECT vec, code FROM $cat.`${sim.AnnIndex.postingsPath(s"$root/idx")}`")
+        .collect()
+      assert(rows.length === full.filter(col("vec_id") < below).count(), stage)
+      val wrong = rows.filter(r => r.getString(1) != code(r.getString(0)))
+      assert(wrong.isEmpty, s"$stage: ${wrong.length} of ${rows.length} codes differ, " +
+        wrong.take(2).map(r => s"${r.getString(1)} vs ${code(r.getString(0))}").mkString("; "))
+    }
+    // a whole-stage method that does not compile fails the query here,
+    // instead of running the stage interpreted
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try {
+      sim.AnnIndex.create(spark, cat, s"$root/idx", base, cents, pq = Some(books))
+      checkCodes("create", 3000)
+      full.filter(col("vec_id") >= 3000 && col("vec_id") < 3500)
+        .writeTo(s"$cat.`$base`").append() // v2
+      val (from, to) = sim.AnnIndex.refresh(spark, cat, s"$root/idx")
+      assert(from <= to, "the append must fold")
+      checkCodes("refresh", 3500)
+    } finally spark.conf.unset("spark.sql.codegen.fallback")
+  }
+
   test("refresh cost is delta-proportional; probe scan plans only probed cells") {
     spark.conf.set("spark.sql.catalog.graftcat",
       classOf[graft.sources.GraftCatalog].getName)

@@ -281,8 +281,7 @@ class CaicPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     (qes.toArray(Array.empty[QueryExecution]).toSeq, jobs.get)
   }
 
-  test("one CaicJob.runOnce launches no Spark job, only a local scan") {
-    import org.apache.spark.sql.execution.LocalTableScanExec
+  test("one CaicJob.runOnce runs no query and no Spark job") {
     import graft.caic.{CaicJob, GraftConfig}
     var submitted = ""
     val submitter = new CaicJob.Submitter { def submit(body: String): Unit = submitted = body }
@@ -291,12 +290,9 @@ class CaicPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       returned = CaicJob.runOnce(spark, fetcher, submitter, GraftConfig(debug = false, "-", "-"))
     }
     assert(jobs === 0)
-    assert(qes.size === 1)
-    // the whole invocation was folded on the driver: an unevaluable
-    // expression would leave a Project above the scan, and a job per call
-    val executed = qes.head.executedPlan
-    assert(executed.isInstanceOf[LocalTableScanExec] && executed.children.isEmpty,
-      executed.treeString)
+    // the document is evaluated by the prepared projections on the
+    // calling thread: no action, so no query execution either
+    assert(qes.size === 0)
     assert(returned === submitted)
     assert(mapper.readTree(submitted).get("features").size() === 4)
   }
@@ -305,22 +301,19 @@ class CaicPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode}
     import graft.caic.{CaicJob, GraftConfig}
     // every Cast, implicit or explicit, records the ANSI setting it was
-    // analyzed under
-    def evalModes(qe: org.apache.spark.sql.execution.QueryExecution) =
-      qe.analyzed.flatMap(_.expressions.flatMap(_.collect { case c: Cast => c.evalMode })).toSet
+    // analyzed under; read it from the expressions the invocation evaluated
+    def evalModes() = CaicPipeline.preparedExpressions(spark)
+      .flatMap(_.collect { case c: Cast => c.evalMode }).toSet
     val submitter = new CaicJob.Submitter { def submit(body: String): Unit = () }
     def invoke(ansi: Boolean) = {
       spark.conf.set("spark.sql.ansi.enabled", ansi.toString)
-      val (qes, _) = actions {
-        CaicJob.runOnce(spark, fetcher, submitter, GraftConfig(debug = false, "-", "-"))
-      }
-      assert(qes.size === 1)
-      qes.head
+      CaicJob.runOnce(spark, fetcher, submitter, GraftConfig(debug = false, "-", "-"))
+      evalModes()
     }
     try {
-      assert(evalModes(invoke(ansi = true)) === Set(EvalMode.ANSI))
-      assert(evalModes(invoke(ansi = false)) === Set(EvalMode.LEGACY))
-      assert(evalModes(invoke(ansi = true)) === Set(EvalMode.ANSI))
+      assert(invoke(ansi = true) === Set(EvalMode.ANSI))
+      assert(invoke(ansi = false) === Set(EvalMode.LEGACY))
+      assert(invoke(ansi = true) === Set(EvalMode.ANSI))
     } finally spark.conf.unset("spark.sql.ansi.enabled")
   }
 

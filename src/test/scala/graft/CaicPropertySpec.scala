@@ -35,8 +35,8 @@ class CaicPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
       (2, Gen.oneOf("bogus", "EXTREME", "", "mod", "no_rating")),
       (1, Gen.const(null: String)))
 
-  private def sample[A](g: Gen[A], n: Int): List[A] =
-    Gen.listOfN(n, g).apply(Gen.Parameters.default, Seed(42L)).get
+  private def sample[A](g: Gen[A], n: Int, seed: Long = 42L): List[A] =
+    Gen.listOfN(n, g).apply(Gen.Parameters.default, Seed(seed)).get
 
   /** JS model: Array.indexOf (−1 on miss); worst = min over seed 5. */
   private def jsIdx(s: String): Int = scale.indexOf(s)
@@ -202,6 +202,51 @@ class CaicPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
     // not only the drops
     assert(emitted > 50, emitted)
     assert(multiParts > 10, multiParts)
+  }
+
+  test("document is thread-safe and keeps one prepared entry per session") {
+    import java.util.concurrent.{Callable, CyclicBarrier, Executors, TimeUnit}
+    import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode}
+    // 8 threads, each on its own generated pairs, all started together:
+    // every concurrent document equals the sequential one for its pair
+    val threads = 8
+    val pairs = (0 until threads).map(t => sample(documentPairGen, 25, seed = 1000L + t))
+    val sequential = pairs.map(_.map { case (a, p) => CaicPipeline.document(spark, a, p) })
+    val barrier = new CyclicBarrier(threads)
+    val pool = Executors.newFixedThreadPool(threads)
+    val concurrent = try {
+      val futures = pairs.map(ps => pool.submit(new Callable[Seq[String]] {
+        def call(): Seq[String] = {
+          barrier.await()
+          (1 to 4).flatMap(_ => ps.map { case (a, p) => CaicPipeline.document(spark, a, p) })
+        }
+      }))
+      futures.map(_.get(120, TimeUnit.SECONDS))
+    } finally pool.shutdownNow()
+    pairs.indices.foreach { t =>
+      concurrent(t).grouped(pairs(t).size).foreach(run =>
+        run.zip(sequential(t)).zip(pairs(t)).foreach { case ((got, want), (a, p)) =>
+          assert(got == want, s"thread $t: areas=$a\nproducts=$p")
+        })
+    }
+    // two sessions of one context, ANSI on and off, called in turn: each
+    // keeps its own prepared entry, never the other's, and never re-plans
+    val ansi = spark.newSession()
+    val legacy = spark.newSession()
+    ansi.conf.set("spark.sql.ansi.enabled", "true")
+    legacy.conf.set("spark.sql.ansi.enabled", "false")
+    def modes(s: org.apache.spark.sql.SparkSession) = CaicPipeline.preparedExpressions(s)
+      .flatMap(_.collect { case c: Cast => c.evalMode }).toSet
+    val (sa, sl) = (CaicPipeline.preparedExpressions(ansi), CaicPipeline.preparedExpressions(legacy))
+    val mixed = pairs.head
+    val want = mixed.map { case (a, p) => CaicPipeline.document(spark, a, p) }
+    mixed.zip(want).foreach { case ((a, p), w) =>
+      for (s <- Seq(ansi, legacy)) assert(CaicPipeline.document(s, a, p) == w)
+      assert(modes(ansi) === Set(EvalMode.ANSI))
+      assert(modes(legacy) === Set(EvalMode.LEGACY))
+      assert(CaicPipeline.preparedExpressions(ansi) eq sa)
+      assert(CaicPipeline.preparedExpressions(legacy) eq sl)
+    }
   }
 
   test("fingerprint is invariant under punctuation/whitespace/case noise") {

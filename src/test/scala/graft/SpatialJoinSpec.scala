@@ -152,6 +152,42 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"the long-void final plan grew with the ring count: $nodes nodes")
   }
 
+  test("ring KNN retires superseded ring checkpoints at each fold and stays exact") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.expressions.Window
+    val dir = "/root/testdata/sf0.001"
+    val p = graft.Tables.customer(spark, dir).select(col("c_custkey").as("p_id"),
+      pmod(col("c_custkey") * 13L, lit(1000L)).as("px"),
+      pmod(col("c_custkey") * 41L, lit(1000L)).as("py"))
+    val q = graft.Tables.supplier(spark, dir).select(col("s_suppkey").as("q_id"),
+      pmod(col("s_suppkey") * 23L, lit(1000L)).as("qx"),
+      pmod(col("s_suppkey") * 53L, lit(1000L)).as("qy"))
+    val ref = p.crossJoin(q)
+      .withColumn("dist2", (col("px") - col("qx")) * (col("px") - col("qx")) +
+        (col("py") - col("qy")) * (col("py") - col("qy")))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("p_id")).orderBy(col("dist2"), col("q_id"))))
+      .where(col("rn") <= 3)
+      .select(col("p_id"), col("q_id"), col("dist2"), col("rn").cast("long"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    // with 16-wide cells the farthest probe's third neighbor is more than
+    // 16 rings out, so the output union folds at least twice
+    val w = 16L
+    val farthest = math.sqrt(ref.map(_._3).max.toDouble)
+    assert(farthest > 16 * w, s"only ${farthest / w} rings: fewer than 2 folds")
+    val sc = spark.sparkContext
+    graft.Caches.drain()
+    val before = sc.getPersistentRDDs.size
+    val got = ops.TimeSeries.knnUnbounded(p, q, k = 3, w = w, maxRing = 1000 / 16 + 2)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    // held until the drain: the build cache, the pending set, the last
+    // fold and at most 8 unfolded rings' topk; not one store per ring
+    val held = sc.getPersistentRDDs.size - before
+    graft.Caches.drain()
+    assert(got === ref, s"missing=${(ref -- got).take(3)} extra=${(got -- ref).take(3)}")
+    assert(held <= 11, s"$held checkpoint stores held after ${farthest / w} rings")
+  }
+
   test("r17: unbounded KNN with FEWER than k build points emits the global set") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
