@@ -1,11 +1,9 @@
 package graft.sim
 
-import com.fasterxml.jackson.databind.ObjectMapper
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{GraftTxn, JsonDocVersions}
+import graft.sources.FeedIndex
 
 import scala.jdk.CollectionConverters._
 
@@ -13,13 +11,15 @@ import scala.jdk.CollectionConverters._
   * item 2): q55's IVF postings as a TABLE instead of a per-query fit —
   * the Faiss/Milvus deployment shape, where the index outlives any one
   * query and a repeated probe never re-pays assignment of the corpus.
+  * Layout, create, watermark and refresh frame are [[FeedIndex]]'s;
+  * this object supplies the postings and the delta.
   *
   * Layout under one index root:
   *   - `_ann_index.json` — the pinned coarse-quantizer centroids
   *     (literal doubles, the q55 oracle-interpolation contract), the
-  *     base table path, and the last-folded base version (display
-  *     cache; the authoritative watermark is the postings table's own
-  *     transaction ledger, the q183/MV recipe).
+  *     optional PQ codebooks, the base table path and the create-time
+  *     base version, written once at create. The only fold watermark is
+  *     the postings table's transaction ledger.
   *   - `postings/` — a graft-jsondoc table `(cell BIGINT, vec_id
   *     BIGINT, vec STRING)` PARTITIONED BY cell: probing nProbe of K
   *     cells plans only those partitions' files, which is the entire
@@ -36,17 +36,15 @@ import scala.jdk.CollectionConverters._
   * applies deletes/upserts — cost O(|delta|), never O(index). The
   * centroids deliberately never refit on refresh: Faiss' contract too
   * (a drifted corpus wants a rebuilt index, not a silently morphing
-  * one; staleness is observable as base_head vs last in the def file).
-  * A merge-on-read base keeps the delta row-level; a copy-on-write
-  * base's rewrites surface untouched rows as delete+insert pairs that
-  * fold as no-op upserts (correct, just more rows — the same trade the
-  * MV layer documents). */
+  * one; `CALL ann_state` reports the base head against the fold
+  * watermark). A merge-on-read base keeps the delta row-level; a
+  * copy-on-write base's rewrites surface untouched rows as
+  * delete+insert pairs that fold as no-op upserts (correct, just more
+  * rows — the same trade the MV layer documents). */
 object AnnIndex {
   val DefName = "_ann_index.json"
-  def postingsPath(indexRoot: String): String =
-    new java.io.File(indexRoot, "postings").getAbsolutePath
-  private def appId(indexRoot: String): String =
-    "graft-ann:" + new java.io.File(indexRoot).getAbsolutePath
+  private val index = new FeedIndex(DefName, "graft-ann", "ann index")
+  def postingsPath(indexRoot: String): String = index.postingsPath(indexRoot)
 
   /** `pq`: optional product-quantization codebooks (M subspaces × K
     * centroids × subDim doubles, the q137 fit) — when present, every
@@ -55,52 +53,17 @@ object AnnIndex {
     * [[searchPq]] runs the ADC + shortlist + exact-refine chain over
     * the persisted codes. */
   final case class IndexDef(basePath: String, centroids: Seq[Seq[Double]],
-      lastVersion: Int, pq: Option[Seq[Seq[Seq[Double]]]] = None)
-
-  private def defFile(indexRoot: String) = new java.io.File(indexRoot, DefName)
-
-  def writeDef(indexRoot: String, d: IndexDef): Unit = {
-    val mapper = new ObjectMapper()
-    val root = mapper.createObjectNode()
-    root.put("basePath", d.basePath)
-    val cs = root.putArray("centroids")
-    d.centroids.foreach { c =>
-      val a = cs.addArray(); c.foreach(a.add); ()
-    }
-    d.pq.foreach { books =>
-      val ps = root.putArray("pq")
-      books.foreach { book =>
-        val b = ps.addArray()
-        book.foreach { c => val a = b.addArray(); c.foreach(a.add); () }
-      }
-    }
-    root.put("lastVersion", d.lastVersion)
-    val f = defFile(indexRoot)
-    val tmp = new java.io.File(f.getParentFile, s".${f.getName}.tmp")
-    java.nio.file.Files.writeString(tmp.toPath, mapper.writeValueAsString(root))
-    try java.nio.file.Files.move(tmp.toPath, f.toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      case _: java.nio.file.AtomicMoveNotSupportedException =>
-        if (f.exists()) f.delete()
-        if (!tmp.renameTo(f))
-          throw new java.io.IOException(s"ann index def write failed for $f")
-    }
-  }
+      pq: Option[Seq[Seq[Seq[Double]]]] = None)
 
   def readDef(indexRoot: String): IndexDef = {
-    val root = new ObjectMapper().readTree(
-      java.nio.file.Files.readString(defFile(indexRoot).toPath))
+    val root = index.readDef(indexRoot)
+    def doubles(n: com.fasterxml.jackson.databind.JsonNode) =
+      n.elements().asScala.map(_.asDouble()).toIndexedSeq
     IndexDef(
       basePath = root.get("basePath").asText(),
-      centroids = root.get("centroids").elements().asScala.map(a =>
-        a.elements().asScala.map(_.asDouble()).toIndexedSeq).toIndexedSeq,
-      lastVersion = root.get("lastVersion").asInt(),
+      centroids = root.get("centroids").elements().asScala.map(doubles).toIndexedSeq,
       pq = Option(root.get("pq")).map(_.elements().asScala.map(b =>
-        b.elements().asScala.map(c =>
-          c.elements().asScala.map(_.asDouble()).toIndexedSeq)
-          .toIndexedSeq).toIndexedSeq))
+        b.elements().asScala.map(doubles).toIndexedSeq).toIndexedSeq))
   }
 
   /** Stage the parsed (and, with PQ, unit-normalized) vector as REAL
@@ -214,91 +177,59 @@ object AnnIndex {
     C.map(_.toIndexedSeq).toIndexedSeq
   }
 
-  /** Build the index: create the cell-partitioned postings table and
-    * materialize the base snapshot AT ITS CURRENT HEAD (pinned read —
-    * racing commits fold on the next refresh). `base` must be a
-    * graft-jsondoc table `(vec_id BIGINT, vec STRING)`. */
+  /** Build the index at the base's current head (pinned read — racing
+    * commits fold on the next refresh) and return that version. `base`
+    * must be a graft-jsondoc table `(vec_id BIGINT, vec STRING)`. */
   def create(spark: SparkSession, cat: String, indexRoot: String,
       basePath: String, centroids: Seq[Seq[Double]],
-      pq: Option[Seq[Seq[Seq[Double]]]] = None): Unit = {
-    new java.io.File(indexRoot).mkdirs()
-    val postings = postingsPath(indexRoot)
-    val head = JsonDocVersions.latestVersion(basePath).getOrElse(0)
-    val d0 = IndexDef(new java.io.File(basePath).getAbsolutePath,
-      centroids, head, pq)
-    // MERGE-ON-READ postings (r17, PERF.md "AnnIndex refresh"): an upsert
-    // delta's keys spread across cells, so a copy-on-write MERGE would
-    // rewrite ~every cell's files even for a tiny delta — the q183 MV
-    // amplification problem. MOR lands delete vectors + insert files in
-    // O(changed rows); searches pay the DV fold until OPTIMIZE compacts.
-    spark.sql(s"CREATE TABLE $cat.`$postings` " +
-      "(cell BIGINT, vec_id BIGINT, vec STRING, code STRING) USING `graft-jsondoc` " +
-      "PARTITIONED BY (cell) " +
-      "TBLPROPERTIES ('write.rowlevel.mode' = 'merge-on-read', " +
-      "'write.autocompact.dvs' = '32')")
-    if (head > 0) {
-      withParsed(
-        spark.sql(s"SELECT vec_id, vec FROM $cat.`$basePath` VERSION AS OF $head"),
-        needUnit = pq.isDefined)
+      pq: Option[Seq[Seq[Seq[Double]]]] = None): Int = {
+    def fields(root: com.fasterxml.jackson.databind.node.ObjectNode): Unit = {
+      val cs = root.putArray("centroids")
+      centroids.foreach { c => val a = cs.addArray(); c.foreach(a.add); () }
+      pq.foreach { books =>
+        val ps = root.putArray("pq")
+        books.foreach { book =>
+          val b = ps.addArray()
+          book.foreach { c => val a = b.addArray(); c.foreach(a.add); () }
+        }
+      }
+    }
+    index.create(spark, cat, indexRoot, basePath,
+      "cell BIGINT, vec_id BIGINT, vec STRING, code STRING", "cell", fields) { base =>
+      withParsed(base.select(col("vec_id"), col("vec")), needUnit = pq.isDefined)
         .withColumn("cell", cellOf(centroids))
         .withColumn("code", pq.map(codeOf).getOrElse(lit("")))
         .select(col("cell"), col("vec_id"), col("vec"), col("code"))
-        .writeTo(s"$cat.`$postings`").append()
     }
-    writeDef(indexRoot, d0)
   }
 
-  /** CONTINUOUS refresh (r18, the GraftMv.autoRefresh contract applied
-    * to the index): one micro-batch stream on the base's change feed
-    * drives [[refresh]] per commit. The batch content is only a
-    * SIGNAL — the fold still reads `(last, head]` under the postings
-    * ledger, so redelivery re-folds nothing. Returns the started
-    * query (caller stops it). */
+  /** CONTINUOUS refresh (r18): the base's change-feed signal stream
+    * ([[FeedIndex.signals]]) drives [[refresh]] per commit. Returns the
+    * started query (caller stops it). */
   def autoRefresh(spark: SparkSession, cat: String, indexRoot: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val d = readDef(indexRoot)
-    spark.readStream.format("graft-jsondoc")
-      .option("readChanges", "true")
-      .option("path", d.basePath).load()
-      .writeStream
-      .queryName(s"graft-ann-autorefresh-${new java.io.File(indexRoot).getName}")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (_: DataFrame, _: Long) =>
-        refresh(spark, cat, indexRoot)
-        ()
-      }
-      .start()
-  }
+      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
+    index.autoRefresh(spark, indexRoot, checkpoint) {
+      refresh(spark, cat, indexRoot)
+      ()
+    }
 
-  /** The index's staleness triple: (base path, last folded version —
-    * ledger-authoritative, base head). */
-  def stateOf(indexRoot: String): (String, Int, Int) = {
-    val d = readDef(indexRoot)
-    val last = math.max(d.lastVersion,
-      JsonDocVersions.lastTxn(postingsPath(indexRoot), appId(indexRoot))
-        .map(_.toInt).getOrElse(-1))
-    (d.basePath, last, JsonDocVersions.latestVersion(d.basePath).getOrElse(0))
-  }
+  /** The index's staleness triple: (base path, last folded version,
+    * base head). */
+  def stateOf(indexRoot: String): (String, Int, Int) = index.stateOf(indexRoot)
 
   /** Fold base changes `(last, head]` into the postings. Returns the
-    * folded (from, to); from > to = already current. Exactly-once via
-    * the postings manifest's transaction ledger ([[GraftTxn]]). */
-  def refresh(spark: SparkSession, cat: String, indexRoot: String): (Int, Int) =
-    synchronized {
-      val d = readDef(indexRoot)
-      val postings = postingsPath(indexRoot)
-      val last = math.max(d.lastVersion,
-        JsonDocVersions.lastTxn(postings, appId(indexRoot)).map(_.toInt).getOrElse(-1))
-      val head = JsonDocVersions.latestVersion(d.basePath).getOrElse(0)
-      if (head <= last) return (last + 1, last)
-      val feed = spark.read.format("graft-jsondoc")
-        .option("readChanges", "true")
-        .option("startingVersion", (last + 1).toString)
-        .option("endingVersion", head.toString)
-        .option("path", d.basePath).load()
+    * folded (from, to); from > to = already current. */
+  def refresh(spark: SparkSession, cat: String, indexRoot: String): (Int, Int) = {
+    val d = readDef(indexRoot)
+    index.refresh(spark, cat, indexRoot, d.basePath,
+      """ON t.vec_id = d.vec_id
+        |WHEN MATCHED AND d.act = 'delete' THEN DELETE
+        |WHEN MATCHED THEN UPDATE SET cell = d.cell, vec = d.vec, code = d.code
+        |WHEN NOT MATCHED AND d.act = 'insert' THEN
+        |  INSERT (cell, vec_id, vec, code) VALUES (d.cell, d.vec_id, d.vec, d.code)""".stripMargin) {
       // net action per key: latest commit wins; insert outranks delete
       // within a commit (a DV-delete + re-insert is an upsert)
-      val net = feed.withColumn("rn", row_number().over(
+      _.withColumn("rn", row_number().over(
           org.apache.spark.sql.expressions.Window.partitionBy(col("vec_id"))
             .orderBy(col("_commit_version").desc,
               when(col("_change_type") === "insert", 0).otherwise(1))))
@@ -309,23 +240,8 @@ object AnnIndex {
         .withColumn("code", when(col("act") === "insert",
           d.pq.map(codeOf).getOrElse(lit(""))))
         .select(col("vec_id"), col("vec"), col("act"), col("cell"), col("code"))
-      val view = s"graft_ann_delta_$head"
-      net.createOrReplaceTempView(view)
-      GraftTxn.begin(postings, appId(indexRoot), head.toLong)
-      try spark.sql(
-        s"""MERGE INTO $cat.`$postings` t USING $view d ON t.vec_id = d.vec_id
-           |WHEN MATCHED AND d.act = 'delete' THEN DELETE
-           |WHEN MATCHED THEN UPDATE SET cell = d.cell, vec = d.vec, code = d.code
-           |WHEN NOT MATCHED AND d.act = 'insert' THEN
-           |  INSERT (cell, vec_id, vec, code) VALUES (d.cell, d.vec_id, d.vec, d.code)""".stripMargin)
-      finally {
-        GraftTxn.clear(postings)
-        spark.catalog.dropTempView(view)
-        ()
-      }
-      writeDef(indexRoot, d.copy(lastVersion = head))
-      (last + 1, head)
     }
+  }
 
   /** PQ search over the PERSISTED codes (the q137 ADC chain with the
     * encode already paid at write time — the whole point of storing

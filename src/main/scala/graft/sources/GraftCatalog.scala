@@ -112,70 +112,57 @@ class GraftCatalog extends TableCatalog
     ident.namespace().isEmpty &&
       Set("years", "months", "days", "hours", "bucket", "truncate").contains(ident.name())
 
-  /** SQL maintenance: `CALL graftcat.vacuum(path, keep_last)` and
-    * `CALL graftcat.optimize(path, target_bytes)` — see
-    * [[GraftProcedures]]. */
+  /** SQL maintenance: `CALL graftcat.vacuum(path, keep_last)`,
+    * `CALL graftcat.optimize(path, target_bytes)`, … — see
+    * [[GraftProcedures]]. One name -> factory table drives loading,
+    * listing and the unknown-name message, so the three cannot drift. */
+  private lazy val procedures: scala.collection.immutable.ListMap[String,
+      () => org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure] = {
+    import GraftProcedures._
+    scala.collection.immutable.ListMap(
+      "vacuum" -> (() => VacuumProcedure),
+      "optimize" -> (() => OptimizeProcedure),
+      "expire_snapshots" -> (() => ExpireSnapshotsProcedure),
+      "cluster" -> (() => new ClusterProcedure(catalogName)),
+      "set_partition_spec" -> (() => SetPartitionSpecProcedure),
+      "create_tag" -> (() => CreateTagProcedure),
+      "drop_tag" -> (() => DropTagProcedure),
+      "rollback" -> (() => RollbackProcedure),
+      "publish" -> (() => PublishProcedure),
+      "discard_staged" -> (() => DiscardStagedProcedure),
+      "create_branch" -> (() => CreateBranchProcedure),
+      "drop_branch" -> (() => DropBranchProcedure),
+      "fast_forward" -> (() => FastForwardProcedure),
+      "cherry_pick" -> (() => CherryPickProcedure),
+      "merge_branch" -> (() => MergeBranchProcedure),
+      "recover_txn2" -> (() => RecoverTxn2Procedure),
+      "refresh_mv" -> (() => new RefreshMvProcedure(this)),
+      "create_ann" -> (() => new CreateAnnProcedure(catalogName)),
+      "refresh_ann" -> (() => new RefreshIndexProcedure("refresh_ann", "ANN",
+        catalogName, graft.sim.AnnIndex.refresh)),
+      "ann_state" -> (() => new IndexStateProcedure("ann_state", "ANN",
+        graft.sim.AnnIndex.stateOf)),
+      "ann_search" -> (() => new AnnSearchProcedure(catalogName)),
+      "create_text_index" -> (() => new CreateTextIndexProcedure(catalogName)),
+      "refresh_text_index" -> (() => new RefreshIndexProcedure("refresh_text_index",
+        "text", catalogName, graft.text.TextIndex.refresh)),
+      "text_index_state" -> (() => new IndexStateProcedure("text_index_state", "text",
+        graft.text.TextIndex.stateOf)),
+      "text_search" -> (() => new TextSearchProcedure(catalogName)),
+      "text_search_and" -> (() => new TextSearchProcedure(catalogName, "and")),
+      "text_search_phrase" -> (() => new TextSearchProcedure(catalogName, "phrase")))
+  }
+
   override def loadProcedure(ident: Identifier): org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure = {
     require(ident.namespace().isEmpty,
       s"graft catalog procedures take no namespace: ${ident.toString}")
-    ident.name() match {
-      case "vacuum" => GraftProcedures.VacuumProcedure
-      case "optimize" => GraftProcedures.OptimizeProcedure
-      case "expire_snapshots" => GraftProcedures.ExpireSnapshotsProcedure
-      case "cluster" => new GraftProcedures.ClusterProcedure(catalogName)
-      case "set_partition_spec" => GraftProcedures.SetPartitionSpecProcedure
-      case "create_tag" => GraftProcedures.CreateTagProcedure
-      case "drop_tag" => GraftProcedures.DropTagProcedure
-      case "rollback" => GraftProcedures.RollbackProcedure
-      case "publish" => GraftProcedures.PublishProcedure
-      case "discard_staged" => GraftProcedures.DiscardStagedProcedure
-      case "create_branch" => GraftProcedures.CreateBranchProcedure
-      case "drop_branch" => GraftProcedures.DropBranchProcedure
-      case "fast_forward" => GraftProcedures.FastForwardProcedure
-      case "cherry_pick" => GraftProcedures.CherryPickProcedure
-      case "merge_branch" => GraftProcedures.MergeBranchProcedure
-      case "recover_txn2" => GraftProcedures.RecoverTxn2Procedure
-      case "refresh_mv" => new GraftProcedures.RefreshMvProcedure(this)
-      case "refresh_ann" => new GraftProcedures.RefreshAnnProcedure(catalogName)
-      case "create_ann" => new GraftProcedures.CreateAnnProcedure(catalogName)
-      case "ann_search" => new GraftProcedures.AnnSearchProcedure(catalogName)
-      case "ann_state" => GraftProcedures.AnnStateProcedure
-      case "create_text_index" => new GraftProcedures.CreateTextIndexProcedure(catalogName)
-      case "refresh_text_index" => new GraftProcedures.RefreshTextIndexProcedure(catalogName)
-      case "text_index_state" => GraftProcedures.TextIndexStateProcedure
-      case "text_search" => new GraftProcedures.TextSearchProcedure(catalogName)
-      case "text_search_and" =>
-        new GraftProcedures.TextSearchProcedure(catalogName, "and")
-      case "text_search_phrase" =>
-        new GraftProcedures.TextSearchProcedure(catalogName, "phrase")
-      case other => throw new UnsupportedOperationException(
-        s"graft catalog has no procedure '$other' (available: vacuum, optimize, " +
-          "expire_snapshots, cluster, set_partition_spec, create_tag, drop_tag, " +
-          "rollback, publish, discard_staged, create_branch, drop_branch, " +
-          "fast_forward, cherry_pick, merge_branch, refresh_mv, create_ann, refresh_ann, " +
-          "ann_state, create_text_index, refresh_text_index, text_index_state, text_search)")
-    }
+    procedures.getOrElse(ident.name(), throw new UnsupportedOperationException(
+      s"graft catalog has no procedure '${ident.name()}' " +
+        s"(available: ${procedures.keys.mkString(", ")})"))()
   }
 
   override def listProcedures(namespace: Array[String]): Array[Identifier] =
-    Array(Identifier.of(Array.empty, "vacuum"), Identifier.of(Array.empty, "optimize"),
-      Identifier.of(Array.empty, "expire_snapshots"), Identifier.of(Array.empty, "cluster"),
-      Identifier.of(Array.empty, "set_partition_spec"),
-      Identifier.of(Array.empty, "create_tag"), Identifier.of(Array.empty, "drop_tag"),
-      Identifier.of(Array.empty, "rollback"), Identifier.of(Array.empty, "publish"),
-      Identifier.of(Array.empty, "discard_staged"),
-      Identifier.of(Array.empty, "create_branch"), Identifier.of(Array.empty, "drop_branch"),
-      Identifier.of(Array.empty, "fast_forward"), Identifier.of(Array.empty, "cherry_pick"),
-      Identifier.of(Array.empty, "recover_txn2"), Identifier.of(Array.empty, "refresh_mv"),
-      Identifier.of(Array.empty, "refresh_ann"), Identifier.of(Array.empty, "merge_branch"),
-      Identifier.of(Array.empty, "create_ann"), Identifier.of(Array.empty, "ann_state"),
-      Identifier.of(Array.empty, "create_text_index"),
-      Identifier.of(Array.empty, "refresh_text_index"),
-      Identifier.of(Array.empty, "text_index_state"),
-      Identifier.of(Array.empty, "text_search"),
-      Identifier.of(Array.empty, "text_search_and"),
-      Identifier.of(Array.empty, "text_search_phrase"),
-      Identifier.of(Array.empty, "ann_search"))
+    procedures.keys.map(Identifier.of(Array.empty, _)).toArray
 
   /** Identifier -> directory. Empty namespace = the original
     * path-addressed form (the name IS the directory path, unchanged

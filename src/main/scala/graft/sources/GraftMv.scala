@@ -1296,7 +1296,7 @@ private[graft] object GraftMv {
     sweepDistDirs(dataDir)
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
+  private[sources] def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory)
       Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
     if (!f.delete() && f.exists())
@@ -1473,14 +1473,13 @@ private[graft] object GraftMv {
     * crash window the replay adjudication exists for. */
   private[graft] val crashAfterDistMerge = new scala.util.DynamicVariable(false)
 
-  /** CONTINUOUS refresh (r17): one micro-batch stream per base on its
-    * change feed, each batch driving [[refresh]]. The batch CONTENT is
-    * only a commit SIGNAL — the fold still reads `(last, head]` under
-    * the manifest ledger, so a redelivered batch after a crash (or a
-    * deleted checkpoint) re-folds NOTHING: exactly-once comes from the
-    * fold, never from the stream. Join views get two signal streams,
-    * one per base; [[refresh]]'s same-JVM lock serializes concurrent
-    * signals. Returns the started queries (caller stops them). */
+  /** CONTINUOUS refresh (r17): one [[FeedIndex.signals]] stream per
+    * base, each batch driving [[refresh]]. The batch is only a commit
+    * signal — the fold still reads `(last, head]` under the manifest
+    * ledger, so a redelivered batch re-folds nothing. Join views get
+    * one signal stream per base; [[refresh]]'s same-JVM lock serializes
+    * concurrent signals. Returns the started queries (caller stops
+    * them). */
   def autoRefresh(session: SparkSession, cat: String, defFile: java.io.File,
       dataDir: java.io.File, name: String, checkpointRoot: String)
       : Seq[org.apache.spark.sql.streaming.StreamingQuery] = {
@@ -1488,17 +1487,11 @@ private[graft] object GraftMv {
     val bases = d.basePath +: (d.join.map(_.basePath2).toSeq ++
       d.joinN.toSeq.flatMap(_.paths))
     bases.zipWithIndex.map { case (base, i) =>
-      session.readStream.format("graft-jsondoc")
-        .option("readChanges", "true")
-        .option("path", base).load()
-        .writeStream
-        .queryName(s"graft-mv-autorefresh-$name-$i")
-        .option("checkpointLocation", s"$checkpointRoot/$i")
-        .foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
-          refresh(session, cat, defFile, dataDir, name)
-          ()
-        }
-        .start()
+      FeedIndex.signals(session, base, s"graft-mv-autorefresh-$name-$i",
+          s"$checkpointRoot/$i") {
+        refresh(session, cat, defFile, dataDir, name)
+        ()
+      }
     }
   }
 

@@ -416,6 +416,64 @@ private[sources] object GraftProcedures {
     }
   }
 
+  /** `CALL graftcat.ann_state('<index root>')` and
+    * `CALL graftcat.text_index_state('<index root>')` — a persisted
+    * index's staleness row (the `mv#mvstate` analog): base path, last
+    * folded base version (the postings ledger), base head, stale commit
+    * count. `what` names the index kind in the description. */
+  final class IndexStateProcedure(procName: String, what: String,
+      stateOf: String => (String, Int, Int)) extends UnboundProcedure {
+    override def name(): String = procName
+    override def description(): String =
+      s"report the persisted $what index's base, fold watermark, base head and staleness"
+    override def bind(inputType: StructType): BoundProcedure = new BoundProcedure {
+      override def name(): String = procName
+      override def description(): String = IndexStateProcedure.this.description()
+      override def parameters(): Array[ProcedureParameter] = Array(
+        ProcedureParameter.in("index_root", StringType).build())
+      override def isDeterministic: Boolean = false
+      override def call(input: InternalRow): java.util.Iterator[Scan] = {
+        val (base, last, head) = stateOf(input.getUTF8String(0).toString)
+        val schema = new StructType()
+          .add("base_path", StringType, nullable = false)
+          .add("last_folded_version", LongType, nullable = false)
+          .add("base_head", LongType, nullable = false)
+          .add("stale_commits", LongType, nullable = false)
+        Iterator(scanOf(schema, Seq(InternalRow(
+          UTF8String.fromString(base), last.toLong, head.toLong,
+          math.max(0L, (head - last).toLong))))).asJava
+      }
+    }
+  }
+
+  /** `CALL graftcat.refresh_ann('<index root>')` and
+    * `CALL graftcat.refresh_text_index('<index root>')` — fold the
+    * base's change feed into a persisted index ([[FeedIndex]]). Returns
+    * the folded range; `(from > to)` means the index was already
+    * current. */
+  final class RefreshIndexProcedure(procName: String, what: String,
+      catalogName: String, refresh: (org.apache.spark.sql.SparkSession, String,
+        String) => (Int, Int)) extends UnboundProcedure {
+    override def name(): String = procName
+    override def description(): String =
+      s"fold the base table's change feed since the last refresh into the persisted $what index"
+    override def bind(inputType: StructType): BoundProcedure = new BoundProcedure {
+      override def name(): String = procName
+      override def description(): String = RefreshIndexProcedure.this.description()
+      override def parameters(): Array[ProcedureParameter] = Array(
+        ProcedureParameter.in("index_root", StringType).build())
+      override def isDeterministic: Boolean = false
+      override def call(input: InternalRow): java.util.Iterator[Scan] = {
+        val (from, to) = refresh(org.apache.spark.sql.SparkSession.active,
+          catalogName, input.getUTF8String(0).toString)
+        val schema = new StructType()
+          .add("folded_from", LongType, nullable = false)
+          .add("folded_to", LongType, nullable = false)
+        Iterator(scanOf(schema, Seq(InternalRow(from.toLong, to.toLong)))).asJava
+      }
+    }
+  }
+
   /** `CALL graftcat.create_ann('<index root>', '<base path>', k)` —
     * fit a k-cell coarse quantizer from the base (deterministic
     * sample) and build the persisted IVF index at the base's head
@@ -438,39 +496,9 @@ private[sources] object GraftProcedures {
         val base = input.getUTF8String(1).toString
         val cents = graft.sim.AnnIndex.fit(spark, catalogName, base,
           input.getLong(2).toInt)
-        graft.sim.AnnIndex.create(spark, catalogName, root, base, cents)
-        val v = graft.sim.AnnIndex.readDef(root).lastVersion.toLong
+        val v = graft.sim.AnnIndex.create(spark, catalogName, root, base, cents).toLong
         val schema = new StructType().add("indexed_version", LongType, nullable = false)
         Iterator(scanOf(schema, Seq(InternalRow(v)))).asJava
-      }
-    }
-  }
-
-  /** `CALL graftcat.ann_state('<index root>')` — the persisted ANN
-    * index's staleness row (the `mv#mvstate` analog): base path, last
-    * folded base version (ledger-authoritative), base head, stale
-    * commit count. */
-  object AnnStateProcedure extends UnboundProcedure {
-    override def name(): String = "ann_state"
-    override def description(): String =
-      "report the persisted ANN index's base, fold watermark, base head and staleness"
-    override def bind(inputType: StructType): BoundProcedure = new BoundProcedure {
-      override def name(): String = "ann_state"
-      override def description(): String = AnnStateProcedure.description()
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("index_root", StringType).build())
-      override def isDeterministic: Boolean = false
-      override def call(input: InternalRow): java.util.Iterator[Scan] = {
-        val (base, last, head) =
-          graft.sim.AnnIndex.stateOf(input.getUTF8String(0).toString)
-        val schema = new StructType()
-          .add("base_path", StringType, nullable = false)
-          .add("last_folded_version", LongType, nullable = false)
-          .add("base_head", LongType, nullable = false)
-          .add("stale_commits", LongType, nullable = false)
-        Iterator(scanOf(schema, Seq(InternalRow(
-          UTF8String.fromString(base), last.toLong, head.toLong,
-          math.max(0L, (head - last).toLong))))).asJava
       }
     }
   }
@@ -510,30 +538,6 @@ private[sources] object GraftProcedures {
     }
   }
 
-  /** `CALL graftcat.refresh_ann('<index root>')` — fold the base's
-    * change feed into a persisted ANN index ([[graft.sim.AnnIndex]]). */
-  final class RefreshAnnProcedure(catalogName: String) extends UnboundProcedure {
-    override def name(): String = "refresh_ann"
-    override def description(): String =
-      "fold the base table's change feed since the last refresh into the persisted ANN index"
-    override def bind(inputType: StructType): BoundProcedure = new BoundProcedure {
-      override def name(): String = "refresh_ann"
-      override def description(): String = RefreshAnnProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("index_root", StringType).build())
-      override def isDeterministic: Boolean = false
-      override def call(input: InternalRow): java.util.Iterator[Scan] = {
-        val (from, to) = graft.sim.AnnIndex.refresh(
-          org.apache.spark.sql.SparkSession.active, catalogName,
-          input.getUTF8String(0).toString)
-        val schema = new StructType()
-          .add("folded_from", LongType, nullable = false)
-          .add("folded_to", LongType, nullable = false)
-        Iterator(scanOf(schema, Seq(InternalRow(from.toLong, to.toLong)))).asJava
-      }
-    }
-  }
-
   /** `CALL graftcat.create_text_index('<index root>', '<base path>',
     * buckets)` — build the persisted inverted text index at the base's
     * head ([[graft.text.TextIndex]]). Returns the indexed version. */
@@ -550,64 +554,11 @@ private[sources] object GraftProcedures {
         ProcedureParameter.in("buckets", LongType).build())
       override def isDeterministic: Boolean = false
       override def call(input: InternalRow): java.util.Iterator[Scan] = {
-        graft.text.TextIndex.create(org.apache.spark.sql.SparkSession.active,
+        val v = graft.text.TextIndex.create(org.apache.spark.sql.SparkSession.active,
           catalogName, input.getUTF8String(0).toString,
-          input.getUTF8String(1).toString, input.getLong(2).toInt)
-        val v = graft.text.TextIndex.readDef(
-          input.getUTF8String(0).toString).lastVersion.toLong
+          input.getUTF8String(1).toString, input.getLong(2).toInt).toLong
         val schema = new StructType().add("indexed_version", LongType, nullable = false)
         Iterator(scanOf(schema, Seq(InternalRow(v)))).asJava
-      }
-    }
-  }
-
-  /** `CALL graftcat.refresh_text_index('<index root>')` — fold the
-    * base's change feed into the persisted text index. */
-  final class RefreshTextIndexProcedure(catalogName: String) extends UnboundProcedure {
-    override def name(): String = "refresh_text_index"
-    override def description(): String =
-      "fold the base table's change feed since the last refresh into the persisted text index"
-    override def bind(inputType: StructType): BoundProcedure = new BoundProcedure {
-      override def name(): String = "refresh_text_index"
-      override def description(): String = RefreshTextIndexProcedure.this.description()
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("index_root", StringType).build())
-      override def isDeterministic: Boolean = false
-      override def call(input: InternalRow): java.util.Iterator[Scan] = {
-        val (from, to) = graft.text.TextIndex.refresh(
-          org.apache.spark.sql.SparkSession.active, catalogName,
-          input.getUTF8String(0).toString)
-        val schema = new StructType()
-          .add("folded_from", LongType, nullable = false)
-          .add("folded_to", LongType, nullable = false)
-        Iterator(scanOf(schema, Seq(InternalRow(from.toLong, to.toLong)))).asJava
-      }
-    }
-  }
-
-  /** `CALL graftcat.text_index_state('<index root>')` — the text
-    * index's staleness row (the ann_state analog). */
-  object TextIndexStateProcedure extends UnboundProcedure {
-    override def name(): String = "text_index_state"
-    override def description(): String =
-      "report the persisted text index's base, fold watermark, base head and staleness"
-    override def bind(inputType: StructType): BoundProcedure = new BoundProcedure {
-      override def name(): String = "text_index_state"
-      override def description(): String = TextIndexStateProcedure.description()
-      override def parameters(): Array[ProcedureParameter] = Array(
-        ProcedureParameter.in("index_root", StringType).build())
-      override def isDeterministic: Boolean = false
-      override def call(input: InternalRow): java.util.Iterator[Scan] = {
-        val (base, last, head) =
-          graft.text.TextIndex.stateOf(input.getUTF8String(0).toString)
-        val schema = new StructType()
-          .add("base_path", StringType, nullable = false)
-          .add("last_folded_version", LongType, nullable = false)
-          .add("base_head", LongType, nullable = false)
-          .add("stale_commits", LongType, nullable = false)
-        Iterator(scanOf(schema, Seq(InternalRow(
-          UTF8String.fromString(base), last.toLong, head.toLong,
-          math.max(0L, (head - last).toLong))))).asJava
       }
     }
   }

@@ -1,22 +1,22 @@
 package graft.text
 
-import com.fasterxml.jackson.databind.ObjectMapper
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{GraftTxn, JsonDocVersions}
+import graft.sources.FeedIndex
 
 /** PERSISTED INVERTED TEXT INDEX maintained from the change feed (r17
   * — the lexical twin of [[graft.sim.AnnIndex]]): q101's BM25 retrieval
   * re-pays corpus tokenization on every query; at 100 TB the postings
   * must live as a TABLE (the Lucene/Elasticsearch deployment shape)
-  * and fold per commit.
+  * and fold per commit. Layout, create, watermark and refresh frame are
+  * [[FeedIndex]]'s; this object supplies the postings and the delta.
   *
   * Layout under one index root:
-  *   - `_text_index.json` — base table path, bucket count, last-folded
-  *     base version (display cache; the authoritative watermark is the
-  *     postings table's own transaction ledger, the q183/MV recipe).
+  *   - `_text_index.json` — base table path, bucket count and the
+  *     create-time base version, written once at create. The only fold
+  *     watermark is the postings table's transaction ledger
+  *     (`CALL text_index_state` reports it).
   *   - `postings/` — a graft-jsondoc table `(bucket BIGINT, term
   *     STRING, doc_id BIGINT, tf BIGINT, dl BIGINT)` PARTITIONED BY
   *     bucket, where `bucket = pmod(xxhash64(term), B)`: a query for
@@ -50,40 +50,14 @@ import graft.sources.{GraftTxn, JsonDocVersions}
 object TextIndex {
   val DefName = "_text_index.json"
   val DocSentinel = "__doc__"
-  def postingsPath(indexRoot: String): String =
-    new java.io.File(indexRoot, "postings").getAbsolutePath
-  private def appId(indexRoot: String): String =
-    "graft-text:" + new java.io.File(indexRoot).getAbsolutePath
+  private val index = new FeedIndex(DefName, "graft-text", "text index")
+  def postingsPath(indexRoot: String): String = index.postingsPath(indexRoot)
 
-  final case class IndexDef(basePath: String, buckets: Int, lastVersion: Int)
-
-  private def defFile(indexRoot: String) = new java.io.File(indexRoot, DefName)
-
-  def writeDef(indexRoot: String, d: IndexDef): Unit = {
-    val mapper = new ObjectMapper()
-    val root = mapper.createObjectNode()
-    root.put("basePath", d.basePath)
-    root.put("buckets", d.buckets)
-    root.put("lastVersion", d.lastVersion)
-    val f = defFile(indexRoot)
-    val tmp = new java.io.File(f.getParentFile, s".${f.getName}.tmp")
-    java.nio.file.Files.writeString(tmp.toPath, mapper.writeValueAsString(root))
-    try java.nio.file.Files.move(tmp.toPath, f.toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      case _: java.nio.file.AtomicMoveNotSupportedException =>
-        if (f.exists()) f.delete()
-        if (!tmp.renameTo(f))
-          throw new java.io.IOException(s"text index def write failed for $f")
-    }
-  }
+  final case class IndexDef(basePath: String, buckets: Int)
 
   def readDef(indexRoot: String): IndexDef = {
-    val root = new ObjectMapper().readTree(
-      java.nio.file.Files.readString(defFile(indexRoot).toPath))
-    IndexDef(root.get("basePath").asText(), root.get("buckets").asInt(),
-      root.get("lastVersion").asInt())
+    val root = index.readDef(indexRoot)
+    IndexDef(root.get("basePath").asText(), root.get("buckets").asInt())
   }
 
   /** The write-side bucket of a term, evaluated driver-side for the
@@ -132,47 +106,25 @@ object TextIndex {
         col("positions"))
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    if (!f.delete() && f.exists())
-      throw new java.io.IOException(s"cannot delete $f")
-  }
-
-  /** Build the index at the base's current head. `base` must be a
-    * graft-jsondoc table carrying `(doc_id BIGINT, text STRING)` with
-    * doc_id UNIQUE — the index is keyed by it (the vec_id contract of
-    * the ANN index); duplicates refuse loudly here and at refresh. */
+  /** Build the index at the base's current head; returns that version.
+    * `base` must be a graft-jsondoc table carrying `(doc_id BIGINT, text
+    * STRING)` with doc_id UNIQUE — the index is keyed by it (the vec_id
+    * contract of the ANN index); duplicates refuse loudly here and at
+    * refresh. */
   def create(spark: SparkSession, cat: String, indexRoot: String,
-      basePath: String, buckets: Int = 64): Unit = {
-    require(!defFile(indexRoot).isFile,
-      s"text index $indexRoot already exists — delete the index root to rebuild")
-    new java.io.File(indexRoot).mkdirs()
-    val postings = postingsPath(indexRoot)
-    // a crash between CREATE TABLE and the definition write leaves an
-    // orphan postings dir (no def => invisible); sweep it so re-CREATE
-    // starts clean (the GraftMv.create recipe)
-    if (new java.io.File(postings).isDirectory)
-      deleteRecursively(new java.io.File(postings))
-    val head = JsonDocVersions.latestVersion(basePath).getOrElse(0)
-    val dup = spark.sql(s"SELECT doc_id FROM $cat.`$basePath` " +
-      "GROUP BY doc_id HAVING count(*) > 1 LIMIT 1").collect()
-    require(dup.isEmpty, s"text index: the base carries duplicate doc_id " +
-      s"${dup.headOption.map(_.get(0)).getOrElse("")} — the index is keyed " +
-      "by doc_id and requires it unique")
-    spark.sql(s"CREATE TABLE $cat.`$postings` " +
-      "(bucket BIGINT, term STRING, doc_id BIGINT, tf BIGINT, dl BIGINT, " +
-      "positions STRING) " +
-      "USING `graft-jsondoc` PARTITIONED BY (bucket) " +
-      "TBLPROPERTIES ('write.rowlevel.mode' = 'merge-on-read', " +
-      "'write.autocompact.dvs' = '32')")
-    if (head > 0)
-      postingsOf(spark.sql(
-        s"SELECT doc_id, text FROM $cat.`$basePath` VERSION AS OF $head"), buckets)
-        .writeTo(s"$cat.`$postings`").append()
-    writeDef(indexRoot,
-      IndexDef(new java.io.File(basePath).getAbsolutePath, buckets, head))
+      basePath: String, buckets: Int = 64): Int = {
+    val head = index.create(spark, cat, indexRoot, basePath,
+      "bucket BIGINT, term STRING, doc_id BIGINT, tf BIGINT, dl BIGINT, " +
+        "positions STRING", "bucket", _.put("buckets", buckets)) { base =>
+      val dup = base.groupBy(col("doc_id")).count().where(col("count") > 1)
+        .limit(1).collect()
+      require(dup.isEmpty, s"text index: the base carries duplicate doc_id " +
+        s"${dup.headOption.map(_.get(0)).getOrElse("")} — the index is keyed " +
+        "by doc_id and requires it unique")
+      postingsOf(base.select(col("doc_id"), col("text")), buckets)
+    }
     register(spark, indexRoot)
+    head
   }
 
   /** The session's index registry for the transparent rewrite
@@ -192,149 +144,112 @@ object TextIndex {
     spark.conf.getOption(RootsConf).getOrElse("")
       .split(',').map(_.trim).filter(_.nonEmpty).toSeq
 
-  /** CONTINUOUS refresh (r18, the [[graft.sources.GraftMv.autoRefresh]]
-    * contract applied to the index): one micro-batch stream on the
-    * base's change feed drives [[refresh]] per commit. The batch
-    * content is only a SIGNAL — the fold still reads `(last, head]`
-    * under the postings ledger, so a redelivered batch (crashed or
-    * deleted checkpoint) re-folds nothing: exactly-once lives in the
-    * fold, never the stream. Returns the started query (caller
-    * stops it). */
+  /** CONTINUOUS refresh (r18): the base's change-feed signal stream
+    * ([[FeedIndex.signals]]) drives [[refresh]] per commit. Returns the
+    * started query (caller stops it). */
   def autoRefresh(spark: SparkSession, cat: String, indexRoot: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val d = readDef(indexRoot)
-    spark.readStream.format("graft-jsondoc")
-      .option("readChanges", "true")
-      .option("path", d.basePath).load()
-      .writeStream
-      .queryName(s"graft-text-autorefresh-${new java.io.File(indexRoot).getName}")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (_: DataFrame, _: Long) =>
-        refresh(spark, cat, indexRoot)
-        ()
-      }
-      .start()
-  }
+      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
+    index.autoRefresh(spark, indexRoot, checkpoint) {
+      refresh(spark, cat, indexRoot)
+      ()
+    }
 
-  /** The fold watermark AS OF postings-manifest `version` — what the
-    * pinned snapshot holds: the ledger's entry at that version, or
-    * (before any refresh committed) the create-time watermark. The
-    * stale-serving rewrite's race-free anchor
+  /** The fold watermark AS OF postings-manifest `version`: the ledger's
+    * entry at that version, or (before any refresh committed) the
+    * create-time version. The stale-serving rewrite's race-free anchor
     * ([[graft.plans.RewriteOntoTextIndex]]). */
   def lastFoldedAt(indexRoot: String, version: Int): Int =
-    JsonDocVersions.readTxns(postingsPath(indexRoot), version)
-      .get(appId(indexRoot)).map(_.toInt)
-      .getOrElse(readDef(indexRoot).lastVersion)
+    index.lastFoldedAt(indexRoot, version)
 
-  /** The index's staleness triple: (base path, last folded version —
-    * ledger-authoritative, base head). */
-  def stateOf(indexRoot: String): (String, Int, Int) = {
-    val d = readDef(indexRoot)
-    val last = math.max(d.lastVersion,
-      JsonDocVersions.lastTxn(postingsPath(indexRoot), appId(indexRoot))
-        .map(_.toInt).getOrElse(-1))
-    (d.basePath, last, JsonDocVersions.latestVersion(d.basePath).getOrElse(0))
-  }
+  /** The index's staleness triple: (base path, last folded version,
+    * base head). */
+  def stateOf(indexRoot: String): (String, Int, Int) = index.stateOf(indexRoot)
 
   /** Fold base changes `(last, head]` into the postings. Returns the
     * folded (from, to); from > to = already current. */
-  def refresh(spark: SparkSession, cat: String, indexRoot: String): (Int, Int) =
-    synchronized {
-      val d = readDef(indexRoot)
-      val postings = postingsPath(indexRoot)
-      val last = math.max(d.lastVersion,
-        JsonDocVersions.lastTxn(postings, appId(indexRoot)).map(_.toInt).getOrElse(-1))
-      val head = JsonDocVersions.latestVersion(d.basePath).getOrElse(0)
-      if (head <= last) return (last + 1, last)
-      // NOT cached (r19: tried and reverted) — the dup probe, newDocs
-      // and oldDocs each re-execute this scan, but the re-executions
-      // are CHEAPER than one shared cache: the probe's reference is
-      // column-pruned to (doc_id, act, v) and token-skips the heavy
-      // text field entirely, while a cache must materialize text into
-      // columnar batches (q242 probe: task-s min 21→39 with the cache,
-      // jobs +2 on the MV cousins). Guide §5's caveat verbatim: cache
-      // only when recompute beats the memory/materialization cost.
-      val feed = spark.read.format("graft-jsondoc")
-        .option("readChanges", "true")
-        .option("startingVersion", (last + 1).toString)
-        .option("endingVersion", head.toString)
-        .option("path", d.basePath).load()
-        .select(col("doc_id"), col("text"),
-          col("_change_type").as("act"), col("_commit_version").as("v"))
-      import org.apache.spark.sql.expressions.Window
-      // the keyed contract holds per commit too: two surviving inserts
-      // of one doc_id in one commit would make "the final text" a
-      // coin flip — refuse loudly instead of indexing either. And
-      // across commits: a net of 2+ surviving rows for one doc_id
-      // means the base now duplicates the key (an append-to-existing
-      // without a delete is invisible to the feed and stays the
-      // caller's contract to keep). BOTH probes fold into ONE
-      // aggregation pass/action (r18: they were two separate feed scans
-      // + collects — two fixed job costs per refresh for one answer):
-      // per (doc_id, commit) insert counts first, then per doc_id the
-      // max per-commit count and the signed net, checked together.
-      val dup = feed
-        .groupBy(col("doc_id"), col("v"))
-        .agg(sum(when(col("act") === "insert", 1L).otherwise(0L)).as("ci"),
-          sum(when(col("act") === "insert", 1L).otherwise(-1L)).as("cn"))
-        .groupBy(col("doc_id"))
-        .agg(max(col("ci")).as("maxci"), sum(col("cn")).as("net"))
-        .where(col("maxci") > 1 || col("net") > 1).limit(1).collect()
-      dup.headOption.foreach { r =>
-        require(r.getLong(1) <= 1, s"text index: the refresh range inserts " +
-          s"doc_id ${r.get(0)} more than once in one commit — the index is " +
-          "keyed by doc_id and requires it unique")
-        require(r.getLong(2) <= 1, s"text index: the refresh range leaves " +
-          s"doc_id ${r.get(0)} with multiple live rows — the index is keyed " +
-          "by doc_id and requires it unique")
-      }
-      // final text per doc: latest commit wins, insert outranks delete
-      // within one commit (the q206 replay rule)
-      val newDocs = feed.withColumn("rn", row_number().over(
-          Window.partitionBy(col("doc_id")).orderBy(col("v").desc,
-            when(col("act") === "insert", 0).otherwise(1))))
-        .where(col("rn") === 1 && col("act") === "insert")
-        .select(col("doc_id"), col("text"))
-      // pre-range text per doc: the EARLIEST delete image (delete
-      // outranks insert within its commit — it is the before-image);
-      // a doc first seen as an insert was born inside the range and
-      // has no postings to tombstone
-      val oldDocs = feed.withColumn("rn", row_number().over(
-          Window.partitionBy(col("doc_id")).orderBy(col("v").asc,
-            when(col("act") === "delete", 0).otherwise(1))))
-        .where(col("rn") === 1 && col("act") === "delete")
-        .select(col("doc_id"), col("text"))
-      // NOT cached (r19: tried and reverted with the feed cache above)
-      // — the anti-join's second reference is pruned to (doc_id, term)
-      // and skips the positions/tf/dl aggregation work; a cache pays
-      // the full materialization plus columnar-store overhead
-      val puts = postingsOf(newDocs, d.buckets).withColumn("act", lit("put"))
-      val tombstones = postingsOf(oldDocs, d.buckets)
-        .join(puts.select(col("doc_id"), col("term")), Seq("doc_id", "term"),
-          "left_anti")
-        .select(col("bucket"), col("term"), col("doc_id"),
-          lit(null).cast("bigint").as("tf"), lit(null).cast("bigint").as("dl"),
-          lit(null).cast("string").as("positions"), lit("del").as("act"))
-      val view = s"graft_text_delta_$head"
-      puts.unionByName(tombstones).createOrReplaceTempView(view)
-      GraftTxn.begin(postings, appId(indexRoot), head.toLong)
-      try spark.sql(
-        s"""MERGE INTO $cat.`$postings` t USING $view d
-           |ON t.doc_id = d.doc_id AND t.term = d.term
-           |WHEN MATCHED AND d.act = 'del' THEN DELETE
-           |WHEN MATCHED THEN UPDATE SET tf = d.tf, dl = d.dl,
-           |  positions = d.positions
-           |WHEN NOT MATCHED AND d.act = 'put' THEN
-           |  INSERT (bucket, term, doc_id, tf, dl, positions)
-           |  VALUES (d.bucket, d.term, d.doc_id, d.tf, d.dl, d.positions)""".stripMargin)
-      finally {
-        GraftTxn.clear(postings)
-        spark.catalog.dropTempView(view)
-        ()
-      }
-      writeDef(indexRoot, d.copy(lastVersion = head))
-      (last + 1, head)
+  def refresh(spark: SparkSession, cat: String, indexRoot: String): (Int, Int) = {
+    val d = readDef(indexRoot)
+    index.refresh(spark, cat, indexRoot, d.basePath,
+      """ON t.doc_id = d.doc_id AND t.term = d.term
+        |WHEN MATCHED AND d.act = 'del' THEN DELETE
+        |WHEN MATCHED THEN UPDATE SET tf = d.tf, dl = d.dl,
+        |  positions = d.positions
+        |WHEN NOT MATCHED AND d.act = 'put' THEN
+        |  INSERT (bucket, term, doc_id, tf, dl, positions)
+        |  VALUES (d.bucket, d.term, d.doc_id, d.tf, d.dl, d.positions)""".stripMargin)(
+      delta(_, d.buckets))
+  }
+
+  /** The MERGE source of one refresh: puts (`act = 'put'`) for every
+    * changed doc's final postings, tombstones (`act = 'del'`) for its
+    * pre-range terms the final text dropped. */
+  private def delta(changes: DataFrame, buckets: Int): DataFrame = {
+    // NOT cached (r19: tried and reverted) — the dup probe, newDocs
+    // and oldDocs each re-execute this scan, but the re-executions
+    // are CHEAPER than one shared cache: the probe's reference is
+    // column-pruned to (doc_id, act, v) and token-skips the heavy
+    // text field entirely, while a cache must materialize text into
+    // columnar batches (q242 probe: task-s min 21→39 with the cache,
+    // jobs +2 on the MV cousins). Guide §5's caveat verbatim: cache
+    // only when recompute beats the memory/materialization cost.
+    val feed = changes.select(col("doc_id"), col("text"),
+      col("_change_type").as("act"), col("_commit_version").as("v"))
+    import org.apache.spark.sql.expressions.Window
+    // the keyed contract holds per commit too: two surviving inserts
+    // of one doc_id in one commit would make "the final text" a
+    // coin flip — refuse loudly instead of indexing either. And
+    // across commits: a net of 2+ surviving rows for one doc_id
+    // means the base now duplicates the key (an append-to-existing
+    // without a delete is invisible to the feed and stays the
+    // caller's contract to keep). BOTH probes fold into ONE
+    // aggregation pass/action (r18: they were two separate feed scans
+    // + collects — two fixed job costs per refresh for one answer):
+    // per (doc_id, commit) insert counts first, then per doc_id the
+    // max per-commit count and the signed net, checked together.
+    val dup = feed
+      .groupBy(col("doc_id"), col("v"))
+      .agg(sum(when(col("act") === "insert", 1L).otherwise(0L)).as("ci"),
+        sum(when(col("act") === "insert", 1L).otherwise(-1L)).as("cn"))
+      .groupBy(col("doc_id"))
+      .agg(max(col("ci")).as("maxci"), sum(col("cn")).as("net"))
+      .where(col("maxci") > 1 || col("net") > 1).limit(1).collect()
+    dup.headOption.foreach { r =>
+      require(r.getLong(1) <= 1, s"text index: the refresh range inserts " +
+        s"doc_id ${r.get(0)} more than once in one commit — the index is " +
+        "keyed by doc_id and requires it unique")
+      require(r.getLong(2) <= 1, s"text index: the refresh range leaves " +
+        s"doc_id ${r.get(0)} with multiple live rows — the index is keyed " +
+        "by doc_id and requires it unique")
     }
+    // final text per doc: latest commit wins, insert outranks delete
+    // within one commit (the q206 replay rule)
+    val newDocs = feed.withColumn("rn", row_number().over(
+        Window.partitionBy(col("doc_id")).orderBy(col("v").desc,
+          when(col("act") === "insert", 0).otherwise(1))))
+      .where(col("rn") === 1 && col("act") === "insert")
+      .select(col("doc_id"), col("text"))
+    // pre-range text per doc: the EARLIEST delete image (delete
+    // outranks insert within its commit — it is the before-image);
+    // a doc first seen as an insert was born inside the range and
+    // has no postings to tombstone
+    val oldDocs = feed.withColumn("rn", row_number().over(
+        Window.partitionBy(col("doc_id")).orderBy(col("v").asc,
+          when(col("act") === "delete", 0).otherwise(1))))
+      .where(col("rn") === 1 && col("act") === "delete")
+      .select(col("doc_id"), col("text"))
+    // NOT cached (r19: tried and reverted with the feed cache above)
+    // — the anti-join's second reference is pruned to (doc_id, term)
+    // and skips the positions/tf/dl aggregation work; a cache pays
+    // the full materialization plus columnar-store overhead
+    val puts = postingsOf(newDocs, buckets).withColumn("act", lit("put"))
+    val tombstones = postingsOf(oldDocs, buckets)
+      .join(puts.select(col("doc_id"), col("term")), Seq("doc_id", "term"),
+        "left_anti")
+      .select(col("bucket"), col("term"), col("doc_id"),
+        lit(null).cast("bigint").as("tf"), lit(null).cast("bigint").as("dl"),
+        lit(null).cast("string").as("positions"), lit("del").as("act"))
+    puts.unionByName(tombstones)
+  }
 
   /** BM25 top-k over the PERSISTED postings — q101's formula verbatim
     * (k1 = 1.2, b = 0.75, 6-decimal rounded ranking, ties by doc_id),

@@ -46,6 +46,19 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (from, to) = sim.AnnIndex.refresh(spark, "graftcat",
       new java.io.File(idx, "idx").getAbsolutePath)
     assert(from > to, s"second refresh must fold nothing: ($from, $to)")
+    // an OPTIMIZE commit has an empty feed: its refresh folds through
+    // the postings ledger alone, and the next refresh is a no-op
+    val root = new java.io.File(idx, "idx").getAbsolutePath
+    val (_, _, head) = sim.AnnIndex.stateOf(root)
+    val opt = spark.sql(s"CALL graftcat.optimize('${new java.io.File(idx, "base")}', " +
+      s"${32 * 1024 * 1024})").collect()(0).getLong(0)
+    assert(opt === head + 1L, s"OPTIMIZE must commit one base version: $opt")
+    sim.AnnIndex.refresh(spark, "graftcat", root)
+    val (_, last2, head2) = sim.AnnIndex.stateOf(root)
+    assert(last2 === head2 && head2 === head + 1,
+      s"the empty range must advance the watermark: last=$last2 head=$head2")
+    val (from2, to2) = sim.AnnIndex.refresh(spark, "graftcat", root)
+    assert(from2 > to2, s"the refresh after it must fold nothing: ($from2, $to2)")
   }
 
   test("persisted PQ (stored codes) == in-memory q137 after the fold") {
@@ -202,6 +215,32 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       queryVecId = 0L, nProbe = 3, k = 10).collect()
       .map(r2 => (r2.getLong(0), r2.getDouble(1))).toMap
     assert(got2 === got, "compacting the postings must not move one result")
+  }
+
+  test("create sweeps a crash orphan and refuses an existing index") {
+    spark.conf.set("spark.sql.catalog.graftcat",
+      classOf[graft.sources.GraftCatalog].getName)
+    val root = java.nio.file.Files.createTempDirectory("graft_ann_orphan").toString
+    val base = s"$root/base"
+    spark.sql(s"CREATE TABLE graftcat.`$base` (vec_id BIGINT, vec STRING) " +
+      "USING `graft-jsondoc`")
+    sim.Similarity.vectors(spark, dir).filter(col("vec_id") < 3000)
+      .select(col("vec_id"),
+        concat_ws(",", transform(col("v"), x => x.cast("string"))).as("vec"))
+      .writeTo(s"graftcat.`$base`").append()
+    def create() = spark.sql(s"CALL graftcat.create_ann('$root/idx', '$base', 8)").collect()
+    def search() = sim.AnnIndex.search(spark, "graftcat", s"$root/idx",
+      queryVecId = 0L, nProbe = 3, k = 10).collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    create()
+    val fresh = search()
+    // re-CALL on a live index refuses loudly
+    val e = intercept[Exception](create())
+    assert(e.getMessage.contains("already exists"), e.getMessage)
+    // a crash orphan (postings dir, no def file) is swept by re-CREATE
+    assert(new java.io.File(s"$root/idx/${sim.AnnIndex.DefName}").delete())
+    assert(create()(0).getLong(0) === 1L)
+    assert(search() === fresh, "the re-created index must equal the fresh build")
   }
 
   test("ann_search takes an external vector: recall vs exact, CALL == API") {

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.connector.catalog.Identifier
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -204,5 +205,22 @@ class NamedCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.sql("CREATE TABLE graftcat.sec.`..` (k BIGINT) USING `graft-jsondoc`")
     }
     assert(e3.getMessage.contains("segment"))
+  }
+
+  test("procedure table: every listed name loads; an unknown name's message lists them all") {
+    val c = new GraftCatalog()
+    c.initialize("graftcat", org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
+    val names = c.listProcedures(Array.empty).map(_.name()).toSeq
+    assert(names.distinct === names)
+    assert(Set("recover_txn2", "ann_search", "text_search_and", "text_search_phrase",
+      "ann_state", "text_index_state", "refresh_ann", "refresh_text_index")
+      .subsetOf(names.toSet))
+    names.foreach { n =>
+      assert(c.loadProcedure(Identifier.of(Array.empty, n)).name() === n)
+    }
+    val e = intercept[UnsupportedOperationException](
+      c.loadProcedure(Identifier.of(Array.empty, "no_such_procedure")))
+    val listed = e.getMessage.split("available: ", 2)(1).stripSuffix(")").split(", ").toSeq
+    assert(listed.sorted === names.sorted, e.getMessage)
   }
 }

@@ -207,6 +207,37 @@ class TextIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(last === head, s"the index should be current, got last=$last head=$head")
     val row = spark.sql(s"CALL $cat.text_index_state('$idx')").collect()(0)
     assert(row.getLong(3) === 0L, s"stale_commits must be 0: $row")
+    // an OPTIMIZE commit has an empty feed: its refresh folds through
+    // the postings ledger alone, and the next refresh is a no-op
+    val opt = spark.sql(s"CALL $cat.optimize('$root/docs', ${32 * 1024 * 1024})")
+      .collect()(0).getLong(0)
+    assert(opt === head + 1L, s"OPTIMIZE must commit one base version: $opt")
+    spark.sql(s"CALL $cat.refresh_text_index('$idx')").collect()
+    val (_, last2, head2) = TextIndex.stateOf(idx)
+    assert(last2 === head2 && head2 === head + 1,
+      s"the empty range must advance the watermark: last=$last2 head=$head2")
+    val again = spark.sql(s"CALL $cat.refresh_text_index('$idx')").collect()(0)
+    assert(again.getLong(0) > again.getLong(1), s"no-op refresh expected: $again")
+    assert(searched(Seq("alpha", "kappa"), 10) === inline(Seq("alpha", "kappa"), 10))
+  }
+
+  test("lastFoldedAt at a pin taken before the first refresh is the create-time version") {
+    val r2 = java.nio.file.Files.createTempDirectory("graft_ti_pin").toString
+    val t2 = s"$cat.`$r2/docs`"
+    spark.sql(s"CREATE TABLE $t2 (doc_id BIGINT, text STRING) USING `graft-jsondoc`")
+    spark.sql(s"INSERT INTO $t2 VALUES (1, 'alpha beta')")
+    val created = spark.sql(s"CALL $cat.create_text_index('$r2/idx', '$r2/docs', 8)")
+      .collect()(0).getLong(0).toInt
+    val postings = TextIndex.postingsPath(s"$r2/idx")
+    val pin = JsonDocVersions.latestVersion(postings).get
+    spark.sql(s"INSERT INTO $t2 VALUES (2, 'gamma')")
+    val (_, to) = TextIndex.refresh(spark, cat, s"$r2/idx")
+    assert(to === created + 1)
+    // the pinned snapshot holds the create-time postings, whatever the
+    // refresh published after the pin
+    assert(TextIndex.lastFoldedAt(s"$r2/idx", pin) === created)
+    assert(TextIndex.lastFoldedAt(s"$r2/idx",
+      JsonDocVersions.latestVersion(postings).get) === to)
   }
 
   test("continuous refresh follows commits; redelivery never double-folds") {
