@@ -45,8 +45,17 @@ object Guards {
   def shingleDfCap(spark: SparkSession): Long =
     spark.conf.getOption(ShingleDfConf).map(_.toLong).getOrElse(DefaultShingleDf)
 
+  def baselineCap(spark: SparkSession): Long =
+    spark.conf.getOption(CapConf).map(_.toLong).getOrElse(DefaultCap)
+
+  /** An upper bound on a row count (a table's footer rows) when it is
+    * within every cap, else the exact `count`: a cap check decides on
+    * the bound as it would on the count, without a job. */
+  def rowsFor(bound: Long, caps: Long*)(count: => Long): Long =
+    if (caps.forall(bound <= _)) bound else count
+
   def exactBaseline(spark: SparkSession, n: Long, what: String, scalePath: String): Unit = {
-    val cap = spark.conf.getOption(CapConf).map(_.toLong).getOrElse(DefaultCap)
+    val cap = baselineCap(spark)
     require(n <= cap,
       s"$what is a quadratic verifier-only baseline: n=$n rows exceeds cap=$cap. " +
         s"Run it on a sample, raise $CapConf deliberately, or use the scale path: $scalePath.")
@@ -104,26 +113,35 @@ object Dedup {
       "FROM documents GROUP BY fp ORDER BY keep_id"
 
   /** Exact n-gram Jaccard near-dup pairs (threshold 0.5): explode shingle
-    * sets, shuffle on shingle, count per-pair intersections, join back the
-    * set sizes. The jaccard division is a single double op on integral
-    * inputs so the >= threshold decides identically in both engines. */
+    * sets with each set's size, shuffle on shingle, count per-pair
+    * intersections grouped with both sizes. The jaccard division is a
+    * single double op on integral inputs so the >= threshold decides
+    * identically in both engines. */
   /** Unsorted exact-Jaccard pairs ≥ 0.5 — shared by q30 (which adds the
     * oracle-determinism sort) and q65 (which consumes the pair set). */
   def jaccardPairs(spark: SparkSession, dir: String): DataFrame = {
-    // cached: the guard's count, both explode branches, and the sizes
-    // projection all read it. Registered for harness-side unpersist
-    // (graft.Caches) — the returned plan still reads this cache, so the
-    // operator itself must not drop it.
+    // cached: both sides of the self-join (and, when the hot-shingle cap
+    // engages, its df count and size subtraction) read it. Registered for
+    // harness-side unpersist (graft.Caches) — the returned plan still
+    // reads this cache, so the operator itself must not drop it.
     val sh = graft.Caches.register(shingles(spark, dir).cache())
-    val nDocs = sh.count()
+    val cap = Guards.shingleDfCap(spark)
+    // the documents' footer rows bound the shingle rows (a doc with fewer
+    // than 3 tokens has none), and decide the guard and the branch below
+    val nDocs = Guards.rowsFor(rowsUpperBound(spark, dir, "documents"),
+      Guards.baselineCap(spark), cap)(sh.count())
     Guards.exactBaseline(spark, nDocs, "exact-Jaccard shingle self-join",
       scalePath = "q31 (MinHash LSH)")
     // join on xxhash64(shingle), not the shingle text: 8-byte shuffle keys
     // instead of ~20-40-byte strings. array_distinct already deduped the
     // shingle set, so per-doc hash multiplicity is 1 (modulo a 2^-64
-    // collision) and intersection counts are unchanged.
-    val e0 = sh.select(col("doc_id"), explode(col("shingles")).as("s"))
-      .select(col("doc_id"), xxhash64(col("s")).as("s"))
+    // collision) and intersection counts are unchanged. Each exploded row
+    // carries its document's set size `n`, so the pair aggregate has both
+    // sizes at hand and no join brings them back.
+    def explodeSized(sized: DataFrame): DataFrame =
+      sized.select(col("doc_id"), col("n"), explode(col("shingles")).as("s"))
+        .select(col("doc_id"), col("n"), xxhash64(col("s")).as("s"))
+    val size0 = size(col("shingles")).cast("long")
     // hot-shingle cap (Guards.ShingleDfConf): shingles in > cap docs are
     // dropped from BOTH intersections and sizes, so scores stay exact
     // Jaccard over the capped sets; a df² blowup from one ubiquitous
@@ -134,39 +152,36 @@ object Dedup {
     // — the cap trades bounded linear work for an unbounded quadratic
     // term. Only `hot` itself (shingles beyond the cap — tiny by
     // construction) is broadcast.
-    val cap = Guards.shingleDfCap(spark)
     // df <= nDocs always, so when the corpus is smaller than the cap the
     // filter is PROVABLY identity — skip its df aggregation entirely.
     // The protection engages automatically once the corpus is large
     // enough for any shingle to possibly exceed the cap.
-    val (e, sizes) = if (nDocs <= cap) {
-      (e0, sh.select(col("doc_id"), size(col("shingles")).cast("long").as("n")))
+    val e = if (nDocs <= cap) {
+      explodeSized(sh.select(col("doc_id"), size0.as("n"), col("shingles")))
     } else {
+      val e0 = sh.select(col("doc_id"), explode(col("shingles")).as("s"))
+        .select(col("doc_id"), xxhash64(col("s")).as("s"))
       val hot = e0.groupBy(col("s")).agg(count(lit(1)).as("df"))
         .where(col("df") > cap).select(col("s"))
-      val kept = e0.join(broadcast(hot), Seq("s"), "left_anti")
       // capped set sizes WITHOUT re-shuffling the full explode: the total
       // is map-side (array length); only the hot-matching subset shuffles
-      // to be subtracted per doc. hotPerDoc is NOT broadcast: it has one
-      // row per document containing any hot shingle, which in the
-      // adversarial case the cap exists for (boilerplate in every doc)
-      // approaches corpus size — a plain shuffled left join on doc_id is
-      // bounded, and sizes shuffles on doc_id for the pair join anyway.
+      // to be subtracted per doc, before the explode. hotPerDoc is NOT
+      // broadcast: it has one row per document containing any hot
+      // shingle, which in the adversarial case the cap exists for
+      // (boilerplate in every doc) approaches corpus size — a plain
+      // shuffled left join on doc_id is bounded.
       val hotPerDoc = e0.join(broadcast(hot), Seq("s"))
         .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hot"))
-      (kept,
-        sh.select(col("doc_id"), size(col("shingles")).cast("long").as("n_all"))
-          .join(hotPerDoc, Seq("doc_id"), "left")
-          .select(col("doc_id"), (col("n_all") - coalesce(col("n_hot"), lit(0L))).as("n")))
+      explodeSized(sh.join(hotPerDoc, Seq("doc_id"), "left")
+          .select(col("doc_id"), (size0 - coalesce(col("n_hot"), lit(0L))).as("n"), col("shingles")))
+        .join(broadcast(hot), Seq("s"), "left_anti")
     }
-    val pairs = e.as("a").join(e.as("b"),
+    e.as("a").join(e.as("b"),
         col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
+        col("a.n").as("n_a"), col("b.n").as("n_b"))
       .agg(count(lit(1)).as("inter"))
-    pairs
-      .join(sizes.as("sa"), col("id_a") === col("sa.doc_id"))
-      .join(sizes.as("sb"), col("id_b") === col("sb.doc_id"))
-      .withColumn("jac", col("inter").cast("double") / (col("sa.n") + col("sb.n") - col("inter")).cast("double"))
+      .withColumn("jac", col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter")).cast("double"))
       .where(col("jac") >= 0.5)
       // unrounded: integer/integer division is bit-identical in both
       // engines, while round(.,4) can hit decimal ties on binary-exact

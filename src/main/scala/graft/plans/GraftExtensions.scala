@@ -27,6 +27,9 @@ import org.apache.spark.sql.types.IntegerType
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => LevenshteinPrefilter)
+    // a small global sort sorts in one partition, with no range-sampling
+    // job ([[SmallSortInOnePartition]])
+    ext.injectQueryStagePrepRule(_ => SmallSortInOnePartition)
     // SQL views over graft catalogs (r16, [[GraftViews]]): DDL rewrites
     // at the parser (stock Spark hard-refuses V2 view DDL before any
     // injected rule could run — the Iceberg approach), reads expand

@@ -3,6 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.dedup.Guards
 
 /** Similarity search over the embeddings table (SURVEY.md §2B extensions):
   * brute-force cosine (exact, oracle-verified) and a random-hyperplane-LSH
@@ -69,11 +70,14 @@ object Similarity {
     * LSH variant below is the scale path. The threshold compares the raw
     * (bit-identical) double, rounding only the reported value. */
   def q34EmbeddingNeardup(spark: SparkSession, dir: String): DataFrame = {
-    // cached so the guard's count and both self-join branches share one
-    // materialization instead of three scans; registered for harness-side
-    // unpersist (graft.Caches) since the returned plan still reads it
+    // cached so both self-join branches share one materialization;
+    // registered for harness-side unpersist (graft.Caches) since the
+    // returned plan still reads it
     val vs = graft.Caches.register(vectors(spark, dir).cache())
-    graft.dedup.Guards.exactBaseline(spark, vs.count(), "q34 all-pairs cosine",
+    // one vector per embeddings row, so the footer rows decide the guard
+    val n = Guards.rowsFor(rowsUpperBound(spark, dir, "embeddings"),
+      Guards.baselineCap(spark))(vs.count())
+    Guards.exactBaseline(spark, n, "q34 all-pairs cosine",
       scalePath = "q79 (canopy-blocked all-pairs); q35/q55 for top-k")
     vs.as("a").join(vs.as("b"), col("a.vec_id") < col("b.vec_id"))
       .withColumn("cos", cosine(col("a.v"), col("b.v"), col("a.norm"), col("b.norm")))

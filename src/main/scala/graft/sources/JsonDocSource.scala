@@ -2190,9 +2190,21 @@ private[sources] class JsonDocDataWriter(path: String, schema: StructType,
   private def acc(i: Int, v: Any): Unit = {
     if (mins(i) == null) { mins(i) = v; maxs(i) = v }
     else {
-      if (JsonDocStats.cmp(v, mins(i)).exists(_ < 0)) mins(i) = v
-      if (JsonDocStats.cmp(v, maxs(i)).exists(_ > 0)) maxs(i) = v
+      if (below(v, mins(i))) mins(i) = v
+      if (below(maxs(i), v)) maxs(i) = v
     }
+  }
+
+  /** `JsonDocStats.cmp(a, b)` is below 0, with the pairs a column of one
+    * type gives compared directly instead of through two BigDecimal
+    * parses: Long with Long, String with String, and two finite Doubles
+    * (`<` orders them as the BigDecimal path does, -0.0 equal to 0.0).
+    * NaN, the infinities and mixed pairs go through `cmp`. */
+  private def below(a: Any, b: Any): Boolean = (a, b) match {
+    case (x: Long, y: Long) => x < y
+    case (x: Double, y: Double) if java.lang.Double.isFinite(x) && java.lang.Double.isFinite(y) => x < y
+    case (x: String, y: String) => x.compareTo(y) < 0
+    case _ => JsonDocStats.cmp(a, b).exists(_ < 0)
   }
 
   // per-column NDV registers + null counts (r17): one hash per non-null
@@ -2241,10 +2253,14 @@ private[sources] class JsonDocDataWriter(path: String, schema: StructType,
       out
     }
 
+  private val fields = schema.fields
+
   override def write(row: InternalRow): Unit = {
     gen.writeStartObject()
     val shredded = shredValues(row)
-    schema.fields.zipWithIndex.foreach { case (f, i) =>
+    var i = 0
+    while (i < fields.length) {
+      val f = fields(i)
       if (shredded != null && shredded.containsKey(Integer.valueOf(i))) {
         // generated-always: the extraction replaces the incoming value,
         // feeding the same stats/bloom accumulators a real value would
@@ -2282,6 +2298,7 @@ private[sources] class JsonDocDataWriter(path: String, schema: StructType,
           if (bloomAcc(i) != null)
             bloomAcc(i) += JsonDocBlooms.hashConst(v).get
       }
+      i += 1
     }
     gen.writeEndObject()
     gen.writeRaw('\n')
